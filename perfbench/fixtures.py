@@ -177,7 +177,7 @@ def _documents(rng: np.random.Generator, n: int) -> pa.Table:
     words = np.asarray(VOCAB, dtype=object)
     lengths = rng.integers(10, 101, n)
     text = [" ".join(words[rng.integers(0, len(VOCAB), k)]) for k in lengths]
-    for i in np.flatnonzero(rng.random(n) < DUP_SHARE):
+    for i in np.sort(rng.choice(n, round(DUP_SHARE * n), replace=False)):
         text[i] = text[int(rng.integers(0, n))] + " dup"
     return pa.table(
         {

@@ -33,7 +33,10 @@ def run_once(workload: str, seed: int, seconds: int) -> tuple[dict, float]:
     wall = time.perf_counter() - t0
     if out.returncode != 0:
         raise RuntimeError(f"{workload} seed {seed}: exit {out.returncode}\n{out.stderr[-2000:]}")
-    return json.loads(out.stdout.strip().splitlines()[-1]), wall
+    lines = out.stdout.strip().splitlines()
+    res = json.loads(lines[-1])
+    res["report"] = next((json.loads(l[len("report: "):]) for l in lines if l.startswith("report: ")), None)
+    return res, wall
 
 
 def main(argv: list[str] | None = None) -> int:
