@@ -66,9 +66,12 @@ and the string's notation no longer matter.
 This only converts the few FINAL per-group values (post-aggregation), so
 the string round-trip costs nothing in the hot path.
 
-ROUND-9 MIGRATION LEDGER — direct-cast sites still outstanding (each
-needs a DRIVER_WINDOW slot when its oracle text changes; magnitudes
-audited at sf1, 2^53 boundary = 9.0e15 on the scaled integer):
+DIRECT-CAST MIGRATION LEDGER — direct-cast sites still outstanding. An
+oracle text change needs a driver-window slot, and gets one by rule:
+``registry.driver_window()`` ranks every query whose oracle hash differs
+from ORACLE_HASHES.json first, and that snapshot is refreshed when a
+round's CORRECTNESS record is committed, not when the slot is granted.
+Magnitudes audited at sf1, 2^53 boundary = 9.0e15 on the scaled integer:
 
 1. The ``sql_sum_direct`` shim sites (this module): 9 of 9 MIGRATED,
    CLOSED — 5 in round 9 (q_agg_rollup, q_agg_grouping_sets,
@@ -190,15 +193,13 @@ audited at sf1, 2^53 boundary = 9.0e15 on the scaled integer):
    sf0.1) could round the discriminant to a tiny negative — Spark would
    emit NaN, DuckDB would error. Guard BOTH sides as
    SQRT(GREATEST(d, 0)) — pre-validated bit-exact (incl. tiny negatives
-   and signed zero) by fuzz section 35. GUARD SCHEDULE (each rewrite
-   rides the query's natural refresh slot): q_bollinger_bands — the only
-   MEASURED past-2^53 discriminant — DONE in round 12 (head swap,
-   registry.py); q_agg_stats / q_outlier_zscore / q_acf ride their r9
-   slots in round 13 (planned, registry.py ROUND-13 plan); q_ab_ttest /
-   q_rolling_corr ride round 14 (r10 vintage); q_spearman_corr rides
-   round 15 (r11 vintage). Self-dot SQRT arguments (embedding cosines,
-   counts) are sums of non-negative IEEE terms and need no guard. Item
-   closes fully when the last guard lands in round 15.
+   and signed zero) by fuzz section 35. Guarded: q_bollinger_bands, the
+   only MEASURED past-2^53 discriminant. Still open: q_agg_stats,
+   q_outlier_zscore, q_acf, q_ab_ttest, q_rolling_corr, q_spearman_corr;
+   each guard rewrites the oracle text, which re-queues the query for
+   driver adjudication by the hash rule above. Self-dot SQRT arguments
+   (embedding cosines, counts) are sums of non-negative IEEE terms and
+   need no guard.
 """
 
 from __future__ import annotations

@@ -159,16 +159,9 @@ def fan_out(df: DataFrame) -> DataFrame:
     would build the Python RDD conversion of the scan on every call. The
     file count under-estimates splits for multi-split files (>128 MB), but
     the only decision here is "is the scan narrower than the session?",
-    and any input wide enough to mis-estimate is already wide enough.
-
-    (Moved here from operators/dedup.py in round 12 so every operator
-    family can use it; dedup re-exports it.)"""
+    and any input wide enough to mis-estimate is already wide enough."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n) if len(df.inputFiles()) < n else df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(

@@ -26,15 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sales_data_pipeline_gcp_spark.io import fan_out, load
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     _JACCARD_PAIRS_SQL,
     _SHINGLES_SQL,
     JACCARD_THRESHOLD,
-    fan_out,
+    _minhash_sql,
     materialize,
     neardup_pairs,
 )
-from sales_data_pipeline_gcp_spark.io import load
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
 MAX_ITERATIONS = 20
@@ -85,46 +85,37 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
 
 
-def _large_star(
-    e: DataFrame, *, input_oriented: bool = False, dedup_output: bool = True
-) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """One large-star round: for every node u, connect each STRICTLY LARGER
     neighbor v to m(u) = min(neighbors(u) + {u}). Every undirected edge is
     processed from its smaller endpoint's perspective; output edges are
     oriented child > parent (u > v strictly: v = m(u_old) <= u_old < u).
 
-    ``input_oriented=True`` asserts the caller's edge set is DISTINCT and
-    strictly oriented u > v — then the symmetrized union cannot contain
-    duplicates (the two branches live in disjoint half-planes) and the
-    symmetrization ``distinct`` (one full 2|E| exchange) is skipped.
-    ``dedup_output=False`` skips the output ``distinct`` for callers whose
-    next operation re-deduplicates anyway (``_small_star`` starts with
-    one). Both flags exist for the contraction loop (guide §2.4: remove
-    shuffles outright); default behavior is unchanged for arbitrary input.
-    With ``dedup_output=True`` the output is duplicate-free — the
-    invariant the loop's cheap set-equality fixpoint test consumes."""
+    PRECONDITION: ``e`` is DISTINCT and strictly oriented u > v, which the
+    contraction loop guarantees (its seed is a greatest/least distinct and
+    every later ``e`` is ``_small_star`` output). Then the symmetrized
+    union cannot hold duplicates (its two branches live in disjoint
+    half-planes), so it needs no ``distinct``. The output MAY hold
+    duplicates: the one caller feeds it straight to ``_small_star``, which
+    starts with a ``distinct``. Both skipped distincts are full edge-set
+    exchanges (guide §2.4: remove shuffles outright)."""
     from pyspark.sql import Window as W
 
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # ONE u-keyed exchange feeds everything below (guide §2.4: operations
-    # keyed the same way share an exchange): HashPartitioning(u) satisfies
-    # the distinct's (u,v) clustering AND the window's u clustering, and
-    # m(u) = min over the u-partition is a WINDOW, not a groupBy+self-join
-    # — the join formulation re-executed the whole upstream once per join
+    # ONE u-keyed exchange feeds the window (guide §2.4): m(u) = min over
+    # the u-partition is a WINDOW, not a groupBy+self-join — the join
+    # formulation re-executed the whole upstream once per join
     # side (broadcast build) and cost 2 extra exchanges + a broadcast job
-    # per call (round-13 plan probe: 10 Exchange / 4 BroadcastHashJoin for
-    # one fused round; the window form plans 3 Exchange / 0 joins).
-    sym = sym.repartition("u")
-    if not input_oriented:
-        sym = sym.distinct()
+    # per call (measured plan: 10 Exchange / 4 BroadcastHashJoin for one
+    # fused round; the window form plans 3 Exchange / 0 joins).
     m = F.least(F.min("v").over(W.partitionBy("u")), F.col("u"))
-    out = (
-        sym.withColumn("m", m)
+    return (
+        sym.repartition("u")
+        .withColumn("m", m)
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    return out.distinct() if dedup_output else out
 
 
 def _small_star(e: DataFrame) -> DataFrame:
@@ -179,16 +170,11 @@ def connected_components_star(
     cur = e
     n_cur = cur.count()
     for _ in range(max_rounds):
-        # loop-body fusion (guide §2.4, round 13): ``cur`` is always
-        # DISTINCT and strictly oriented u > v (the initial greatest/least
-        # distinct, then _small_star's output invariant), so _large_star
-        # skips its symmetrization distinct, and its output distinct is
-        # skipped because _small_star immediately re-deduplicates — two
-        # full edge-set exchanges (= two AQE stage-jobs) removed per round.
-        nxt = materialize(
-            _small_star(_large_star(cur, input_oriented=True, dedup_output=False)),
-            label="cc_star_round",
-        )
+        # ``cur`` is DISTINCT and strictly oriented u > v (the initial
+        # greatest/least distinct, then _small_star's output invariant) —
+        # _large_star's precondition, which lets the fused round skip two
+        # full edge-set exchanges (= two AQE stage-jobs, guide §2.4)
+        nxt = materialize(_small_star(_large_star(cur)), label="cc_star_round")
         # set-equality fixpoint test, cheapened (guide §2.4): both rounds'
         # edge sets are ``.distinct()`` outputs, so equality ⇔ equal
         # cardinality AND empty one-sided difference. Counting the (already
@@ -205,8 +191,8 @@ def connected_components_star(
     # at fixpoint ``cur`` is a star forest: (child, root). Roots appear
     # only on the right side; give them self-labels. ``nodes`` is derived
     # here from the CHECKPOINTED initial edge set — it feeds exactly one
-    # anti-join, so the round-12 eager checkpoint of it was one extra job
-    # for a subtree that executes once anyway (removed round 13).
+    # anti-join, so checkpointing it would add one eager job for a subtree
+    # that executes once anyway.
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
@@ -217,9 +203,6 @@ def connected_components_star(
         "node", F.col("node").alias("label")
     )
     return children.groupBy("node").agg(F.min("label").alias("label")).unionByName(roots)
-
-
-from sales_data_pipeline_gcp_spark.operators.dedup import _minhash_sql
 
 _CLUSTERS_ORACLE = f"""
     WITH RECURSIVE words AS (
@@ -478,14 +461,12 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_arrays,
     )
 
-    # checkpoint the |docs|-row ARRAY table, derive the exploded stream
-    # lazily, per-doc sizes in-row (round 13 — same restructure as
-    # q_dedup_ngram_jaccard; the shingle self-join's two sides share one
-    # exchange via ReusedExchange)
+    # checkpoint the |docs|-row ARRAY table; jaccard_pairs derives the
+    # exploded stream lazily (the shingle self-join's two sides share one
+    # exchange via ReusedExchange) and takes per-doc sizes in-row
     shs = materialize(shingle_arrays(fan_out(load(spark, sf_dir, "documents"))))
-    sh = shs.select("doc_id", F.explode("shs").alias("shingle"))
     edges = materialize(
-        jaccard_pairs(sh, shs_arrays=shs)
+        jaccard_pairs(shs)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )

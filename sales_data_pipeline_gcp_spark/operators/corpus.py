@@ -19,11 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_gcp_spark.io import load
+from sales_data_pipeline_gcp_spark.io import fan_out, load
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _minhash_sql,
-    fan_out,
     materialize,
     neardup_pairs,
     shingle_arrays,

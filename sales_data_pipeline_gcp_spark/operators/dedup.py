@@ -33,7 +33,7 @@ from sales_data_pipeline_gcp_spark.functions.hashing import (
     sql_shared_hash,
     sql_shared_hash32,
 )
-from sales_data_pipeline_gcp_spark.io import load
+from sales_data_pipeline_gcp_spark.io import fan_out, load
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -71,11 +71,6 @@ shingles AS (
     WHERE len(ws) >= {SHINGLE_WORDS}
 )
 """
-
-
-# fan_out moved to io.py (round 12) so every operator family can use it;
-# re-exported here for the existing dedup/corpus/components import sites.
-from sales_data_pipeline_gcp_spark.io import fan_out  # noqa: F401,E402
 
 #: execution-order counter for SPARK_GRAFT_PLAN_DUMP_DIR checkpoint dumps.
 _PLAN_DUMP_SEQ = 0
@@ -148,14 +143,10 @@ def shingle_arrays(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", shingles.alias("shs"))
 
 
-def shingles_from(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles — DataFrame twin of
-    ``_SHINGLES_SQL``; the form pairwise-verification joins need."""
-    return shingle_arrays(docs).select("doc_id", F.explode("shs").alias("shingle"))
-
-
-def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingles_from(fan_out(load(spark, sf_dir, "documents")))
+def explode_shingles(shs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows of a ``shingle_arrays`` table — DataFrame twin
+    of ``_SHINGLES_SQL``; the form the shingle-keyed joins need."""
+    return shs.select("doc_id", F.explode("shs").alias("shingle"))
 
 
 _JACCARD_PAIRS_SQL = f"""
@@ -175,20 +166,16 @@ jaccard_pairs AS (
 """
 
 
-def jaccard_pairs(sh: DataFrame, *, shs_arrays: DataFrame | None = None) -> DataFrame:
-    """All-pairs shingle Jaccard from an exploded (doc_id, shingle) set —
+def jaccard_pairs(shs: DataFrame) -> DataFrame:
+    """All-pairs shingle Jaccard from a ``shingle_arrays`` table —
     DataFrame twin of ``_JACCARD_PAIRS_SQL``.
 
-    The shingle-keyed self-join IS the candidate generation and must run
-    on the exploded stream; but the per-doc sizes are an in-row ``F.size``
-    over the ARRAY table when the caller has one (``shs_arrays``,
-    round 13) — identical values (one exploded row per distinct shingle),
-    one full occurrence-stream groupBy shuffle removed (guide §2.4)."""
-    sizes = (
-        shs_arrays.select("doc_id", F.size("shs").alias("n"))
-        if shs_arrays is not None
-        else sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    )
+    The shingle-keyed self-join IS the candidate generation and runs on
+    the exploded stream; the per-doc sizes are an in-row ``F.size`` over
+    the array table — identical values (one exploded row per distinct
+    shingle) without a groupBy shuffle of the whole occurrence stream."""
+    sh = explode_shingles(shs)
+    sizes = shs.select("doc_id", F.size("shs").alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
     pairs = (
@@ -263,8 +250,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded stream is derived lazily — the self-join's two sides share
     # one exchange via ReusedExchange) and take per-doc sizes in-row
     shs = materialize(shingle_arrays(fan_out(load(spark, sf_dir, "documents"))))
-    sh = shs.select("doc_id", F.explode("shs").alias("shingle"))
-    return jaccard_pairs(sh, shs_arrays=shs).filter(
+    return jaccard_pairs(shs).filter(
         F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
@@ -982,15 +968,16 @@ def _sql_rp_dot(vec: str, plane: list[int]) -> str:
 
 
 def rp_lsh_code(e: DataFrame, vec: str = "embedding") -> DataFrame:
-    """Append the RP_PLANES-bit sign-LSH code as ``code`` (long). The code
-    is a pure narrow map — at 100 TB this is one pass, no shuffle.
+    """Append the RP_PLANES-bit sign-LSH code as ``code`` (long), replacing
+    any ``code`` column the input already has. The code is a pure narrow
+    map — at 100 TB this is one pass, no shuffle.
 
-    Built as ONE SQL string (round 13, VERDICT item 7): the Column form
-    constructed 32 planes x 64 sign literals through py4j (~2k round
-    trips, ~1s of fn-build time per run); the string form parses the
-    identical expressions — same D-suffixed double literals, same
-    left-to-right fold per plane, same ascending-plane bit sum (rows
-    verified equal against the Column form)."""
+    Built as ONE SQL string: the Column form constructed 32 planes x 64
+    sign literals through py4j (~2k round trips, ~1s of fn-build time per
+    run); the string form parses the identical expressions — same
+    D-suffixed double literals, same left-to-right fold per plane, same
+    ascending-plane bit sum (rows verified equal against the Column
+    form)."""
     terms = []
     for p, plane in enumerate(_SIGNS):
         lits = ", ".join(f"{s:.1f}D" for s in plane)
@@ -1002,7 +989,7 @@ def rp_lsh_code(e: DataFrame, vec: str = "embedding") -> DataFrame:
             f"(CASE WHEN {dot} >= 0 THEN cast({1 << p} as bigint) "
             "ELSE cast(0 as bigint) END)"
         )
-    return e.selectExpr("*", " + ".join(terms) + " as code")
+    return e.drop("code").selectExpr("*", " + ".join(terms) + " as code")
 
 
 @register(
@@ -1328,30 +1315,18 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def prefix_candidates(
-    sh: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    *,
-    shs_arrays: DataFrame | None = None,
-) -> DataFrame:
-    """Distinct (doc_a < doc_b) candidate pairs from the prefix filter:
-    order each doc's shingles by global df (rarest first, ties by value),
-    keep the first |d| - ceil(t*|d|) + 1, equi-join prefixes. Complete for
-    Jaccard >= ``threshold`` by the prefix-filter theorem.
-
-    ``shs_arrays`` (optional): the per-doc DISTINCT-shingle ARRAY table the
-    exploded ``sh`` derives from. When provided, per-doc set sizes come
-    from an in-row ``F.size`` over it instead of a corpus-stream groupBy —
-    identical values (one exploded row per distinct shingle), one full
-    occurrence-stream shuffle removed (guide §2.4)."""
+def prefix_candidates(shs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+    """Distinct (doc_a < doc_b) candidate pairs from the prefix filter over
+    a ``shingle_arrays`` table: order each doc's shingles by global df
+    (rarest first, ties by value), keep the first |d| - ceil(t*|d|) + 1,
+    equi-join prefixes. Complete for Jaccard >= ``threshold`` by the
+    prefix-filter theorem. Per-doc set sizes are an in-row ``F.size`` over
+    the array table, not a groupBy shuffle of the occurrence stream."""
     from pyspark.sql import Window as W
 
+    sh = explode_shingles(shs)
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    sizes = (
-        shs_arrays.select("doc_id", F.size("shs").alias("sz"))
-        if shs_arrays is not None
-        else sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    )
+    sizes = shs.select("doc_id", F.size("shs").alias("sz"))
     prefix_len = (
         F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")).cast("long") + 1
     )
@@ -1389,9 +1364,8 @@ def prefix_candidates(
     )
     # carry both docs' (functional) sizes through the distinct: sz is
     # determined by doc_id, so the candidate-pair cardinality is unchanged,
-    # and the verification stage can compute Jaccard without re-joining the
-    # doc-size table twice (guide §2.4 — round-12: dropped one checkpoint
-    # job + two joins from prefix_filter_pairs)
+    # and verification computes Jaccard without re-joining the doc-size
+    # table twice — one checkpoint job and two joins fewer (guide §2.4)
     return (
         prefixes.alias("a")
         .join(
@@ -1414,65 +1388,29 @@ def prefix_candidates(
     )
 
 
-def prefix_filter_pairs(
-    sh: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    *,
-    shs_arrays: DataFrame | None = None,
-) -> DataFrame:
+def prefix_filter_pairs(shs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> DataFrame:
     """Prefix-filter candidates + exact Jaccard verification — the full
-    AllPairs/PPJoin pipeline over an exploded (doc_id, shingle) set.
+    AllPairs/PPJoin pipeline over a ``shingle_arrays`` table.
 
     Candidates carry both docs' shingle-set sizes out of the candidate join
-    (sz is functional on doc_id — prefix_candidates already computes it for
-    the PPJoin length filter), so verification needs only the intersection
-    count: no separate size table, no checkpoint job for it, and two fewer
-    joins than the round-11 shape (guide §2.4).
-
-    ``shs_arrays`` (optional, round 13): the per-doc shingle ARRAY table.
-    When provided, verification is the verify_jaccard shape — join the
-    |docs|-row array table per side and count ``|A ∩ B|`` IN-ROW via
-    ``array_intersect`` — instead of re-joining the corpus-sized exploded
-    occurrence stream twice and re-aggregating (guide §2.3: the shuffled
-    bytes scale with candidates x arrays, not with the occurrence stream;
-    same restructure the minhash verify got in round 4). Identical
-    Jaccard: both sides are distinct-shingle sets either way."""
-    cands = prefix_candidates(sh, threshold, shs_arrays=shs_arrays)
-    if shs_arrays is not None:
-        a = shs_arrays.select(F.col("doc_id").alias("__ja"), F.col("shs").alias("shs_a"))
-        b = shs_arrays.select(F.col("doc_id").alias("__jb"), F.col("shs").alias("shs_b"))
-        inter = F.size(F.array_intersect("shs_a", "shs_b"))
-        return (
-            cands.join(a, F.col("doc_a") == F.col("__ja"))
-            .join(b, F.col("doc_b") == F.col("__jb"))
-            .select(
-                "doc_a",
-                "doc_b",
-                (
-                    inter.cast("double")
-                    / (F.col("sz_a") + F.col("sz_b") - inter)
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    inter = (
-        cands.join(sh.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
-        .join(
-            sh.alias("y"),
-            (F.col("doc_b") == F.col("y.doc_id"))
-            & (F.col("x.shingle") == F.col("y.shingle")),
-        )
-        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    (sz is functional on doc_id), so verification needs only the
+    intersection: join the |docs|-row array table per side and count
+    ``|A ∩ B|`` in-row via ``array_intersect``. The shuffled bytes then
+    scale with candidates x arrays, not with the corpus-sized occurrence
+    stream, which a join-and-count verification would re-join twice
+    (guide §2.3). Both sides are distinct-shingle sets, so the Jaccard is
+    the same."""
+    cands = prefix_candidates(shs, threshold)
+    a = shs.select(F.col("doc_id").alias("__ja"), F.col("shs").alias("shs_a"))
+    b = shs.select(F.col("doc_id").alias("__jb"), F.col("shs").alias("shs_b"))
+    inter = F.size(F.array_intersect("shs_a", "shs_b"))
     return (
-        inter.select(
+        cands.join(a, F.col("doc_a") == F.col("__ja"))
+        .join(b, F.col("doc_b") == F.col("__jb"))
+        .select(
             "doc_a",
             "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            ).alias("jaccard"),
+            (inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter)).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -1536,13 +1474,10 @@ PREFIX_FILTER_THRESHOLD = 0.8
 )
 def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the |docs|-row ARRAY table, not the corpus-sized exploded
-    # stream (round 13 — the module's own doc-granular-checkpoint
-    # discipline; the exploded stream is derived lazily and only feeds the
-    # df/prefix aggregations), and verify in-row via the array table
-    # (prefix_filter_pairs shs_arrays path)
+    # stream (the module's doc-granular-checkpoint discipline; the exploded
+    # stream is derived lazily and only feeds the df/prefix aggregations)
     shs = materialize(shingle_arrays(fan_out(load(spark, sf_dir, "documents"))))
-    sh = shs.select("doc_id", F.explode("shs").alias("shingle"))
-    return prefix_filter_pairs(sh, PREFIX_FILTER_THRESHOLD, shs_arrays=shs)
+    return prefix_filter_pairs(shs, PREFIX_FILTER_THRESHOLD)
 
 
 # ---------------------------------------------------------------------------
@@ -1760,10 +1695,9 @@ def q_dedup_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one checkpointed shingle-array table feeds signatures, truth pairs,
     # and sizes — the same materialization contract as neardup_pairs
     shs = materialize(shingle_arrays(fan_out(load(spark, sf_dir, "documents"))))
-    exploded = shs.select("doc_id", F.explode("shs").alias("shingle"))
-    sig = materialize(minhash_signatures(exploded))
+    sig = materialize(minhash_signatures(explode_shingles(shs)))
     cand = lsh_candidate_pairs(sig)
-    truth = jaccard_pairs(exploded, shs_arrays=shs).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    truth = jaccard_pairs(shs).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     n_docs_row = shs.agg(F.count("*").alias("n_docs"))
     hit = cand.join(truth.select("doc_a", "doc_b"), ["doc_a", "doc_b"])
     counts = (
@@ -1848,12 +1782,11 @@ def _sig_match_sql() -> str:
 )
 def q_dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     shs = materialize(shingle_arrays(fan_out(load(spark, sf_dir, "documents"))))
-    exploded = shs.select("doc_id", F.explode("shs").alias("shingle"))
-    sig = materialize(minhash_signatures(exploded))
+    sig = materialize(minhash_signatures(explode_shingles(shs)))
     cand = lsh_candidate_pairs(sig)
-    truth = jaccard_pairs(exploded, shs_arrays=shs)
+    truth = jaccard_pairs(shs)
     # one expression string instead of a NUM_HASHES when/otherwise builder
-    # loop (round 13, VERDICT item 7) — same CASE arithmetic, 1 py4j call
+    # loop — same CASE arithmetic, 1 py4j call instead of ~2 per hash
     agree = F.expr(
         " + ".join(
             f"(CASE WHEN __a.mh_{i} = __b.mh_{i} THEN 1 ELSE 0 END)"

@@ -604,24 +604,24 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN orders ON c_custkey = o_custkey
         JOIN nation ON c_nationkey = n_nationkey
         GROUP BY n_name
+    ), tot AS (
+        SELECT {sql_sum('revenue', 2)} AS total FROM nat
     )
-    SELECT n_name, revenue,
-           revenue / SUM(revenue) OVER () AS revenue_share
-    FROM nat
+    SELECT n_name, revenue, revenue / total AS revenue_share
+    FROM nat CROSS JOIN tot
     ORDER BY revenue DESC, n_name
     """,
     doc="Percent-of-total (ratio_to_report shape): grouped exact revenue, "
-    "then each group's share of the grand total via an empty-frame window "
-    "SUM. The window runs over the 25-row aggregate — a single-partition "
-    "window is only safe AFTER aggregation has collapsed the data (on the "
-    "fact table it would serialize; on |groups| rows it is free). Both "
-    "engines divide the same exact-decimal-derived doubles, so shares are "
-    "bit-identical.",
-    tags=("window",),
+    "then each group's share of the grand total. The total is an exact "
+    "decimal sum of the 25 group revenues (exact_sum / sql_sum), so it is "
+    "the same double under any shuffle-partition count — a plain double "
+    "SUM adds in partition order and drifted in the last ulp at 1, 2, 3, "
+    "4, 7 and 8 partitions. The one-row total is broadcast to the 25-row "
+    "aggregate, and its branch reuses the grouped shuffle "
+    "(ReusedExchange), so the fact table is read once.",
+    tags=("agg",),
 )
 def q_window_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     nation = F.broadcast(load(spark, sf_dir, "nation").select("n_nationkey", "n_name"))
@@ -631,8 +631,10 @@ def q_window_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(exact_sum("o_totalprice", 2).alias("revenue"))
     )
+    total = F.broadcast(nat.agg(exact_sum("revenue", 2).alias("total")))
     return (
-        nat.withColumn("revenue_share", F.col("revenue") / F.sum("revenue").over(W.partitionBy()))
+        nat.crossJoin(total)
+        .select("n_name", "revenue", (F.col("revenue") / F.col("total")).alias("revenue_share"))
         .orderBy(F.col("revenue").desc(), F.col("n_name").asc())
     )
 

@@ -26,8 +26,13 @@ Oracle-exactness rules baked into how queries must be written
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -98,873 +103,59 @@ def _load_all_modules() -> None:
         importlib.import_module(mod)
 
 
-#: The external correctness harness adjudicates only the FIRST 50 entries of
-#: ``queries()`` (dict insertion order) — verified in round 1, where 35
-#: declared queries past the window got no hard signal. This list pins the
-#: window explicitly: round 2 front-loads everything unadjudicated in round
-#: 1, the four round-1 fixes, the promoted-to-oracle queries, and the new
-#: round-2 operators. Queries beyond the window keep regression cover from
-#: the local parity suite (tests/test_parity.py), which round 1 proved
-#: equivalent for already-green queries. Rotate per round so every query
-#: eventually carries a driver-adjudicated row.
-DRIVER_WINDOW: tuple[str, ...] = (
-    # ---- round-12 rotation: executed per the committed ROUND-12 plan
-    # (archived below with _ROUND11_WINDOW_HISTORY) with the round-11
-    # VERDICT's corrections (items 1-3). Slot accounting, 50/50:
-    #  36  the ENTIRE round-7-vintage oracled refresh backlog in
-    #      registration order (recomputed from the committed
-    #      CORRECTNESS_r01-r11 union as the VERDICT directed: 37 queries
-    #      sat at r7, minus rows-only q_stream_join_outer; the plan's
-    #      "38" was stale — two r7 rows were refreshed en route, freeing
-    #      2 slots). At the round-13 commit an unrefreshed r7 row would
-    #      be age 6 > K=5. THREE of these carried DIRECT_CAST_LEGACY
-    #      oracles (q_window_frame, q_null_semantics, q_subquery_scalar —
-    #      all magnitude-audited safe); their string-route migrations
-    #      RIDE these refresh slots (the r9/r10/r11 precedent), both
-    #      sides flipped in this commit.
-    #   2  q_kmeans_iter + q_stream_tumbling — the LAST two
-    #      DIRECT_CAST_LEGACY members, pulled one round ahead of their
-    #      r8 refresh turn (q_stream_tumbling's Spark side already ran
-    #      exact_sum; only its oracle text flips). After these the
-    #      ratchet set is EMPTY and test_direct_decimal_cast_is_a_closed_set
-    #      is a pure idiom ban — the rounds-9..12 migration program is
-    #      COMPLETE (exact.py ledger item 2 closed).
-    #   2  the slots freed by the recompute, spent per round-11 VERDICT
-    #      item 2: q_stream_dedup + q_stream_join, the r6-vintage
-    #      rows-only streaming adjudications (lint-excluded — no hash
-    #      evidence to refresh; a slot buys only fresh rows evidence,
-    #      but after 6 rounds a current driver row removes the freshness
-    #      table's only pre-r7 stragglers).
-    #  10  the round-8-vintage oracled refresh head, registration order
-    #      with ONE documented swap: q_bollinger_bands (r8 tail) replaces
-    #      q_dedup_embedding (head #10) per round-11 VERDICT item 3 — the
-    #      SQRT(GREATEST(d, 0)) guard (exact.py ledger watch item 6,
-    #      pre-validated by fuzz §35) rides its slot. Bollinger is the
-    #      only MEASURED past-2^53 discriminant, the watch item's named
-    #      trigger class; q_dedup_embedding refreshes in round 13 at age
-    #      5 = K — due, not stale.
-    # round-7-vintage refresh backlog (all of it), registration order
-    "q_join_semi_anti",
-    "q_window_lag",
-    "q_window_frame",
-    "q_topk",
-    "q_set_union",
-    "q_math_scalars",
-    "q_array_scalars",
-    "q_json_extract",
-    "q_knn_join",
-    "q_sim_pq_adc",
-    "q_text_tokens",
-    "q_text_termstats",
-    "q_multimodal_features",
-    "q_multimodal_framesample",
-    "q_scan_csv_schema",
-    "q_scan_json",
-    "q_pivot",
-    "q_unpivot",
-    "q_map_functions",
-    "q_window_firstlast",
-    "q_array_predicates",
-    "q_window_percentrank",
-    "q_grouped_trend",
-    "q_grouped_trend_sql",
-    "q_merge_upsert",
-    "q_subquery_scalar",
-    "q_subquery_correlated",
-    "q_subquery_in",
-    "q_sample_hash",
-    "q_udf_vectorized",
-    "q_graph_sssp",
-    "q_null_semantics",
-    "q_null_safe_join",
-    "q_agg_filtered",
-    "q_sketch_cms",
-    "q_histogram",
-    # the two pulled-ahead ratchet-emptying migrations
-    "q_kmeans_iter",
-    "q_stream_tumbling",
-    # freed slots: r6-vintage rows-only streaming evidence refreshers
-    "q_stream_dedup",
-    "q_stream_join",
-    # round-8-vintage refresh head (one documented swap, see above)
-    "q_agg_group",
-    "q_agg_cube",
-    "q_agg_global",
-    "q_join_inner",
-    "q_join_star",
-    "q_string_scalars",
-    "q_dedup_exact",
-    "q_dedup_simhash",
-    "q_dedup_embedding_lsh",
-    "q_bollinger_bands",
-)
+#: Repository root: holds the committed driver adjudication records
+#: (``CORRECTNESS_r<N>.json``, one per round) and ``ORACLE_HASHES.json``,
+#: the oracle-text snapshot refreshed whenever a round's record is committed.
+_RECORDS_DIR = Path(__file__).resolve().parents[2]
+
+#: The external correctness harness adjudicates only the first 50 entries
+#: of ``queries()`` (dict insertion order).
+DRIVER_SLOTS = 50
 
 
-#: ROUND-13 ROTATION PLAN (written at the round-12 commit, assuming the
-#: r12 window goes green; slot accounting 50/50 — ZERO spares):
-#:  37  the ENTIRE remaining round-8-vintage oracled refresh backlog in
-#:      registration order (49 r8-vintage queries total, minus the 12
-#:      refreshed in round 12: the 9 surviving head names +
-#:      q_bollinger_bands + the two pulled-ahead migrations). This
-#:      includes q_dedup_embedding, displaced from the round-12 head by
-#:      the bollinger guard swap. At the round-14 commit an unrefreshed
-#:      r8 row would be age 6 > K=5.
-#:  13  the round-9-vintage oracled refresh head (49 r9 queries total),
-#:      registration order with THREE documented swaps: q_agg_stats,
-#:      q_outlier_zscore, q_acf (all r9) replace the last three plain
-#:      head names — their variance-discriminant oracles take the same
-#:      SQRT(GREATEST(d, 0)) guard bollinger took in round 12 (exact.py
-#:      ledger item 6 schedule), riding their natural r9 refresh slots.
-#:      The displaced names refresh in round 14 at age 5 = K — due, not
-#:      stale. Remaining discriminant holders ride later natural slots:
-#:      q_ab_ttest + q_rolling_corr (r10 vintage, round 14),
-#:      q_spearman_corr (r11 vintage, round 15).
-#: PRECEDENCE (the bollinger/acf/emergency clause, unchanged): a
-#: measured at-scale cross-engine divergence or a failed round gate
-#: displaces, in order, (1) the r9 head slots (guard swaps last), and
-#: NEVER the 37 freshness-critical r8 refreshers — displacing one of
-#: those would fail test_adjudication_freshness at the round-14 commit.
+def oracle_hash(oracle: str) -> str:
+    """The ``ORACLE_HASHES.json`` key for an oracle text."""
+    return hashlib.sha256(oracle.encode()).hexdigest()[:16]
 
 
-_ROUND11_WINDOW_HISTORY: tuple[str, ...] = (
-    # ---- round-11 rotation: executed exactly as the round-10 plan wrote
-    # it (the ROUND-11 ROTATION PLAN block archived below with
-    # _ROUND10_WINDOW_HISTORY, and round-10 VERDICT items 2/3/6). Slot
-    # accounting, 50/50, ZERO additions:
-    #  45  the ENTIRE round-6-vintage oracled refresh backlog in
-    #      registration order (computed from the committed
-    #      CORRECTNESS_r01-r10 union: latest adjudication == round 6 —
-    #      47 queries sat at r6 after round 10, minus rows-only
-    #      q_stream_dedup / q_stream_join, which have no refreshable hash
-    #      evidence and are excluded by the freshness lint). At the
-    #      round-12 commit an unrefreshed r6 row would be age 6 > K=5.
-    #      TWO of these also carry DIRECT_CAST_LEGACY oracles
-    #      (q_attribution, q_scan_evolved — both magnitude-audited safe);
-    #      their string-route migrations RIDE these refresh slots for
-    #      free (the round-9/10 precedent), both sides flipped in this
-    #      commit and re-proven by sf0.01/sf0.1 parity + an sf1 refresh.
-    #   1  q_join_right — the LAST sql_sum_direct shim site (displaced
-    #      from r9 by the q_acf emergency, from r10 by slot accounting);
-    #      magnitude-safe flip (scaled sum >= 2 orders under 2^53, same
-    #      class as its migrated q_join_outer mirror). The
-    #      sql_sum_direct / sql_avg_direct shims are DELETED from
-    #      functions/exact.py in this same commit — every oracle sum is
-    #      now string-routed.
-    #   1  q_window_range — the inline-OVER direct cast the round-9
-    #      ratchet-regex widening surfaced (magnitude-safe per-customer
-    #      range-frame sums); the OVER sum is string-routed both sides.
-    #      DIRECT_CAST_LEGACY after these four departures: 5 names.
-    #   3  SPARES, spent per the committed plan's ledger-risk/oldest-first
-    #      rule and round-10 VERDICT items 3/6:
-    #      (a) q_sql_revenue_by_nation — the plan reserved this for the
-    #          scale-4 direct-cast migration, but that ledger row was
-    #          STALE: the query was already string-routed in round 9
-    #          (commit 3a78478, "the two shared-text SQL-surface
-    #          queries") and carries no direct cast today. The slot is
-    #          spent anyway as its driver-row + sf1 refresh and the
-    #          exact.py ledger row is closed with the correction.
-    #      (b)+(c) the plan's named candidates (q_window_frame,
-    #          q_stream_tumbling) are r7/r8-vintage — not yet due — so
-    #          the "else plain oldest-first refreshers" fallback applies:
-    #          q_agg_approx and q_sample_stratified, the two r2-vintage
-    #          rows-only adjudications (8 rounds old, the oldest evidence
-    #          in the repo; round-10 VERDICT item 6 asks for exactly this
-    #          refresh). A slot buys a rows-only query only a fresh
-    #          rows-evidence record — their hard checks stay in
-    #          tests/test_approx.py and the oracled q_agg_approx_bounds
-    #          twin — but after 8 rounds a current driver row is worth
-    #          one slot each; the freshness story then has no asterisk.
-    # round-6-vintage refresh backlog (all of it), registration order
-    "q_agg_distinct",
-    "q_parse_logs",
-    "q_business_days",
-    "q_dedup_blocking_quality",
-    "q_dedup_minhash_accuracy",
-    "q_source_diversity",
-    "q_scan_evolved",
-    "q_udtf_chunks",
-    "q_scan_csv_quoted",
-    "q_scan_text",
-    "q_join_asof_nearest",
-    "q_join_asof_tolerance",
-    "q_funnel_steps",
-    "q_peak_concurrency",
-    "q_cdc_apply",
-    "q_survivorship",
-    "q_graph_triangles_lsh",
-    "q_mannwhitney",
-    "q_dq_referential",
-    "q_sql_chained_index",
-    "q_compaction_plan",
-    "q_calendarize",
-    "q_capped_runsum",
-    "q_rfm",
-    "q_purchase_intervals",
-    "q_attribution",
-    "q_skyline",
-    "q_xyz_analysis",
-    "q_price_index",
-    "q_item_cf",
-    "q_gini_concentration",
-    "q_spearman_corr",
-    "q_ks_test",
-    "q_cusum_changepoint",
-    "q_dow_seasonality",
-    "q_mix_effective_sources",
-    "q_label_window",
-    "q_train_test_split",
-    "q_tv_drift",
-    "q_window_median",
-    "q_feature_hash",
-    "q_lift_curve",
-    "q_window_hampel",
-    "q_spatial_join",
-    "q_spatial_nearest",
-    # the two slotted migrations (oracle text changed in this commit)
-    "q_join_right",
-    "q_window_range",
-    # spares: stale-ledger-row closure refresh + the two r2-vintage
-    # rows-only evidence refreshers (round-10 VERDICT items 3/6)
-    "q_sql_revenue_by_nation",
-    "q_agg_approx",
-    "q_sample_stratified",
-)
+@functools.cache
+def driver_window() -> tuple[str, ...]:
+    """The ``DRIVER_SLOTS`` registered queries the driver adjudicates next,
+    derived from the committed records. Registered queries rank by
 
+    1. oracle text rewritten since the ``ORACLE_HASHES.json`` snapshot
+       (a name absent from the snapshot has no earlier text to differ from);
+    2. latest committed adjudication round, oldest first (never = 0);
+    3. registration order.
 
-# (The ROUND-12 ROTATION PLAN that stood here was executed as the live
-# DRIVER_WINDOW above, with the round-11 VERDICT's recompute correction:
-# the r7 backlog measured 36, not the plan's stale 38; the 2 freed slots
-# went to the r6-vintage rows-only streaming refreshers per VERDICT
-# item 2, and the bollinger guard swap rode the r8 head per item 3.)
+    So a rewritten oracle is re-adjudicated in the next round and every
+    other query in oldest-first rotation; with no records the window is
+    registration order, and names in old records that are no longer
+    registered drop out. Reading 13 records and hashing 231 oracles takes
+    ~5 ms, once per process."""
+    _load_all_modules()
+    latest: dict[str, int] = {}
+    for path in _RECORDS_DIR.glob("CORRECTNESS_r*.json"):
+        rnd = int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name).group(1))
+        for name in json.loads(path.read_text()):
+            latest[name] = max(latest.get(name, 0), rnd)
+    hashes = _RECORDS_DIR / "ORACLE_HASHES.json"
+    snapshot = json.loads(hashes.read_text()) if hashes.exists() else {}
 
+    def rank(item: tuple[int, Query]) -> tuple[bool, int, int]:
+        idx, q = item
+        h = oracle_hash(q.oracle) if q.oracle else None
+        return (snapshot.get(q.name, h) == h, latest.get(q.name, 0), idx)
 
-_ROUND10_WINDOW_HISTORY: tuple[str, ...] = (
-    # ---- round-10 rotation: executed exactly as the round-9 plan wrote it
-    # (the ROUND-10 ROTATION PLAN block archived below with
-    # _ROUND9_WINDOW_HISTORY, and round-9 VERDICT items 1-2). Slot
-    # accounting, 50/50, ZERO additions:
-    #   1  q_dedup_fuzzy at the HEAD — touched implementation late in
-    #      round 9 (khop precedent: same oracle, new plan): the
-    #      exact-duplicate pre-collapse makes the Levenshtein DP run once
-    #      per DISTINCT prefix pair (dedup.py); hash-green locally at
-    #      sf0.01/sf0.1/sf1 but the committed driver row predates the
-    #      plan.
-    #  46  the ENTIRE round-5-vintage oracled refresh backlog in
-    #      registration order (computed from the committed
-    #      CORRECTNESS_r01-r09 union: latest adjudication == round 5 —
-    #      49 queries sat at r5 entering round 9, minus q_graph_khop /
-    #      q_chisq_independence / q_ols_regression which held r9 slots).
-    #      At the round-11 commit an unrefreshed r5 row would be age
-    #      6 > K=5 and tests/test_plan_lint.py::
-    #      test_adjudication_freshness fails the suite; after this
-    #      window goes green no oracled query's latest adjudication is
-    #      older than round 6. TWELVE of these also carried
-    #      DIRECT_CAST_LEGACY oracles (q_cohort_ltv, q_decayed_avg,
-    #      q_join_bucketed, q_join_dpp, q_scan_orc, q_scan_pruned,
-    #      q_time_weighted_avg, q_timeseries_gapfill,
-    #      q_timeseries_interpolate, q_window_rolling_days,
-    #      q_winsorized_mean, q_wow_growth — all magnitude-safe at the
-    #      shipped fixtures, all sf1-parity-tested in PARITY_SF1.json
-    #      "legacy_direct_cast"); their string-route migrations RIDE
-    #      these refresh slots (the round-9 precedent: 9 migrations rode
-    #      r9 refresh slots for free; the rewrite-requeue lint needs a
-    #      slot, not a SECOND slot). Both sides flipped in the same
-    #      mid-round-10 commit, re-proven by sf0.01/sf0.1 parity + an
-    #      sf1 refresh, ratchet 21 -> 9 — after which only q_join_right
-    #      (shim), q_window_range (inline OVER), and seven
-    #      magnitude-audited inline sites remain legacy. Worth naming:
-    #      q_time_weighted_avg's cents x nanoseconds products sum PAST
-    #      2^53 at sf1 (the same luck-class int128->double agreement
-    #      q_agg_stats had before round 9), so this batch retires a real
-    #      latent divergence, not just an idiom.
-    #   3  sql_sum_direct shim migrations, oracle text flipped to the
-    #      string-routed sql_sum in this commit (the rewrite-requeue
-    #      lint grants each a slot here): q_join_salted (its r9 slot was
-    #      ceded to the q_acf int64-overflow emergency), q_join_outer,
-    #      q_tpch_q3_shipping. All three scaled sums are >=2 orders
-    #      below the 2^53 direct-cast divergence boundary at sf1, so the
-    #      flip is a uniformity cleanup, not a correctness fix. After
-    #      this window goes green only q_join_right still calls the
-    #      shim; it flips on a round-11 spare slot and the shim is then
-    #      DELETED from functions/exact.py.
-    "q_dedup_fuzzy",
-    # round-5-vintage refresh backlog (all of it), registration order
-    "q_dedup_minhash_stopshingle",
-    "q_dedup_prefix_filter",
-    "q_dedup_snm",
-    "q_dedup_containment",
-    "q_text_diversity",
-    "q_stream_ingest",
-    "q_multimodal_decode",
-    "q_scan_pruned",
-    "q_join_dpp",
-    "q_scan_orc",
-    "q_join_interval",
-    "q_agg_bitmap_distinct",
-    "q_window_ntile",
-    "q_window_cumedist",
-    "q_wow_growth",
-    "q_window_rolling_days",
-    "q_timeseries_gapfill",
-    "q_event_transitions",
-    "q_time_weighted_avg",
-    "q_gaps_islands",
-    "q_cohort_ltv",
-    "q_cumulative_users",
-    "q_event_paths",
-    "q_rolling_distinct_users",
-    "q_scd2_intervals",
-    "q_table_diff",
-    "q_sample_pps",
-    "q_pagerank",
-    "q_graph_triangles",
-    "q_dq_profile",
-    "q_outlier_mad",
-    "q_weighted_median",
-    "q_pareto_abc",
-    "q_ab_ttest",
-    "q_winsorized_mean",
-    "q_basket_lift",
-    "q_benford_digits",
-    "q_dq_linenumbers",
-    "q_zorder_layout",
-    "q_zorder_pruning",
-    "q_join_bucketed",
-    "q_bloom_prefilter",
-    "q_decayed_avg",
-    "q_timeseries_interpolate",
-    "q_events_anomaly",
-    "q_rolling_corr",
-    # the three shim migrations (oracle text changed in this commit)
-    "q_join_salted",
-    "q_join_outer",
-    "q_tpch_q3_shipping",
-)
-
-
-#: ROUND-11 ROTATION PLAN (written at the round-10 commit, assuming the
-#: r10 window goes green; slot accounting 47/50 — THREE spare slots):
-#:  45  the round-6-vintage ORACLED refresh backlog in registration
-#:      order — 47 queries sit at r6 after r10, minus rows-only
-#:      q_stream_dedup / q_stream_join (no refreshable hash evidence;
-#:      the freshness lint excludes them). At the round-12 commit an
-#:      unrefreshed r6 row is age 6 > K=5.
-#:   1  q_join_right — the last sql_sum_direct shim site (displaced from
-#:      r9 by the q_acf emergency, from r10 by slot accounting);
-#:      magnitude-safe flip, after which sql_sum_direct/sql_avg_direct
-#:      are DELETED from functions/exact.py in the same commit and the
-#:      DIRECT_CAST_LEGACY ratchet shrinks to the inline legacy set.
-#:   1  q_window_range — the inline-OVER direct cast the round-9
-#:      ratchet-regex widening surfaced (magnitude-safe per-customer
-#:      range-frame sums); string-route the OVER sum.
-#:   3  SPARE, filled in ledger risk order unless an emergency
-#:      (bollinger/acf precedent) displaces: (a) q_sql_revenue_by_nation
-#:      — the one dialect-neutral-text site with a finite breach horizon
-#:      (scale 4, ~3.5e14 at sf1, crosses near sf30; round-9 VERDICT
-#:      item 7); (b)+(c) the first two r6-adjacent DIRECT_CAST_LEGACY
-#:      refreshers whose migrations can ride (q_attribution and
-#:      q_scan_evolved are both r6-vintage AND legacy-set members — their
-#:      slots are already in the 45 above, so the spares go to the next
-#:      ledger rows: q_window_frame and q_stream_tumbling if their
-#:      vintage allows, else plain oldest-first refreshers).
-
-
-_ROUND9_WINDOW_HISTORY: tuple[str, ...] = (
-    # ---- round-9 rotation: executed exactly as the round-8 plan wrote it
-    # (the ROUND-9 ROTATION PLAN block archived below with
-    # _ROUND8_WINDOW_HISTORY, and round-8 VERDICT items 1-3), with the one
-    # slot of discretionary slack spent on q_ols_regression (same
-    # past-2^53 scale-0 moment class as q_agg_stats — the exact.py ledger
-    # names both). Slot accounting, 50/50, ZERO additions:
-    #   1  q_graph_khop at the HEAD — its round-8 touched-implementation
-    #      re-queue (bitmap 2-hop rewrite, components.py) ceded its slot
-    #      to the q_bollinger_bands emergency migration; the new plan is
-    #      pinned by local parity at sf0.01/sf0.1 every run but has never
-    #      carried a driver row.
-    #  42  the ENTIRE round-4-vintage oracled refresh backlog in
-    #      registration order (computed from the committed
-    #      CORRECTNESS_r01-r08 union: latest adjudication == round 4) —
-    #      the 36 originally planned plus the 6 displaced by round 8's
-    #      oracle-rewrite requeue. At the round-10 commit an unrefreshed
-    #      r4 row would be age 6 > K=5 and
-    #      tests/test_plan_lint.py::test_adjudication_freshness fails the
-    #      suite; after this window goes green no oracled query's latest
-    #      adjudication is older than round 5. NINE of these also carry
-    #      DIRECT_CAST_LEGACY oracles (q_stream_session,
-    #      q_rollup_hierarchy, q_join_full, q_window_share, q_sessionize,
-    #      q_event_rates, q_outlier_zscore, q_sql_revenue_by_nation,
-    #      q_sql_segment_leaders) — their string-route migrations ride
-    #      these refresh slots for free (the rewrite-requeue lint needs a
-    #      slot, not a SECOND slot).
-    #   7  oracle rewrites from the functions/exact.py ledger plus one
-    #      mid-round emergency, slotted in measured risk order: the three
-    #      luck-class past-2^53 sites first — q_chisq_independence
-    #      (scale-12 contrib sum ~1e16 scaled), q_agg_stats +
-    #      q_ols_regression (scale-0 moment sums ~4.5e16 at sf1; the
-    #      self-described tripwire — measured green by int->double
-    #      agreement, not guaranteed) — then 3 of the sql_sum_direct shim
-    #      sites (q_agg_rollup, q_agg_grouping_sets, q_agg_salted), and
-    #      finally q_acf, whose slot q_join_salted's planned uniformity
-    #      flip ceded when the sf1 parity EXTENSION sweep caught q_acf
-    #      overflowing int64 on both engines (see the in-list comment).
-    #      With two shim sites riding refresh slots above, 4 shim sites
-    #      remain (q_join_salted, q_join_outer, q_join_right,
-    #      q_tpch_q3_shipping — all >=2 orders under the boundary) for
-    #      round 10.
-    "q_graph_khop",
-    # round-4-vintage refresh backlog (all of it), registration order
-    "q_join_range",
-    "q_window_rank",
-    "q_sort_multi",
-    "q_set_intersect_except",
-    "q_window_topk_per_group",
-    "q_date_scalars",
-    "q_filter_nulls",
-    "q_case_impute",
-    "q_project_cast",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_minhash",
-    "q_dedup_incremental",
-    "q_dedup_cdc_chunks",
-    "q_sim_topk",
-    "q_text_quality",
-    "q_text_langid",
-    "q_text_fingerprint",
-    "q_text_tfidf",
-    "q_text_familiarity",
-    "q_stream_sliding",
-    "q_stream_session",
-    "q_rollup_hierarchy",
-    "q_join_asof",
-    "q_join_asof_fwd",
-    "q_join_full",
-    "q_agg_listagg",
-    "q_agg_mode",
-    "q_window_share",
-    "q_funnel",
-    "q_sessionize",
-    "q_event_rates",
-    "q_events_retention",
-    "q_corpus_prepare",
-    "q_tpch_q12_priority_class",
-    "q_tpch_q20_promotion_suppliers",
-    "q_tpch_q2_min_cost_supplier",
-    "q_dedup_clusters",
-    "q_outlier_zscore",
-    "q_sql_revenue_by_nation",
-    "q_sql_segment_leaders",
-    "q_sql_top_orders_per_segment",
-    "q_sql_doc_source_profile",
-    # slotted exact.py migrations: luck-class past-2^53 direct casts first,
-    # then the four shim sites the round-8 plan named
-    "q_chisq_independence",
-    "q_agg_stats",
-    "q_ols_regression",
-    "q_agg_rollup",
-    "q_agg_grouping_sets",
-    "q_agg_salted",
-    # q_join_salted's planned uniformity flip CEDED this slot mid-round
-    # (bollinger precedent: a measured at-scale failure outranks a
-    # magnitude-safe cleanup): the round-9 sf1 parity EXTENSION sweep
-    # (55/56 hash-green) caught q_acf overflowing int64 on BOTH engines —
-    # BIGINT products of ~1e13-cent daily totals — now computed as
-    # DECIMAL(19,0) products with string-routed sums (timeseries.py) and
-    # re-verified at sf0.01/sf0.1/sf1. q_join_salted keeps its
-    # byte-identical sql_sum_direct oracle and migrates with the round-10
-    # shim batch.
-    "q_acf",
-)
-
-
-_ROUND8_WINDOW_HISTORY: tuple[str, ...] = (
-    # ---- round-8 rotation: the backlog-tail round, executed exactly as
-    # the round-7 verdict planned it (VERDICT item 1). Slot accounting,
-    # 50/50, ZERO additions this round (the registry is complete at 237;
-    # the window-budget lint reserves >=40 refresh slots and this round
-    # uses all 50 for refresh):
-    #  40  the round-3-vintage oracled greens — every query whose latest
-    #      driver adjudication is round 3, i.e. the ENTIRE remaining
-    #      refresh backlog older than round 4, in registration order.
-    #      Rounds 4-7 refactored shared helpers under these (fan_out,
-    #      decimal-exact sums, materialize); local parity re-proves them
-    #      every run, but the driver-adjudicated rows are stale.
-    #   1  implementation-touched this round: q_graph_khop — the 2-hop
-    #      distinct count was rewritten from two COUNT(DISTINCT)s (Expand
-    #      + raw-pair shuffle) to the positional-bitmap aggregation
-    #      (VERDICT item 5); same oracle, new plan, so it re-queues by
-    #      the touched-implementation precedent (rounds 5/7).
-    #   9  oracle-rewritten this round (the rewrite-requeue lint outranks
-    #      the plain round-4-vintage refresh head, which moves to round
-    #      9): sf1 parity caught a 1-ulp decimal->double divergence on
-    #      q_agg_group's sum_charge (scaled sum > 2^53 — see
-    #      functions/exact.py), so sql_sum/exact_sum now string-route the
-    #      final conversion. 19 oracles changed text; 13 already hold
-    #      rotation slots above, and these remaining 6 (the high-magnitude
-    #      global/large-group revenue sums, plus 3 slots retained by
-    #      already-listed q_agg_cube/q_join_inner/q_join_star) take the
-    #      discretionary slots. 9 low-magnitude call sites keep the
-    #      byte-identical old oracle via sql_sum_direct and migrate with
-    #      round-9 slots. The 6 displaced r4-vintage refreshers
-    #      (q_join_range, q_window_rank, q_sort_multi,
-    #      q_set_intersect_except, q_window_topk_per_group,
-    #      q_date_scalars) are age 4 at the round-9 commit — within the
-    #      staleness lint's K=5 — and head the round-9 rotation with the
-    #      other 38 round-4-vintage queries. After r8 goes green no
-    #      oracled query's latest adjudication is older than round 4, and
-    #      tests/test_plan_lint.py::test_adjudication_freshness asserts
-    #      the rotation can never stall past K=5 rounds.
-    # round-3-vintage refresh backlog (all of it), registration order
-    "q_string_scalars",
-    "q_dedup_exact",
-    "q_dedup_simhash",
-    "q_dedup_embedding_lsh",
-    "q_dedup_embedding",
-    "q_dedup_fuzzy",
-    "q_sim_ann_ivf",
-    "q_embed_quantize",
-    "q_kmeans_iter",
-    "q_text_repetition",
-    "q_text_normalize",
-    "q_text_redact",
-    "q_text_chunk",
-    "q_stream_tumbling",
-    "q_percentile",
-    "q_argmin_join",
-    "q_set_bag_ops",
-    "q_window_cume",
-    "q_agg_approx_bounds",
-    "q_domain_mix",
-    "q_decontaminate",
-    "q_dedup_lines",
-    "q_tpch_q1_pricing",
-    "q_tpch_q5_local_supplier",
-    "q_tpch_q10_returns",
-    "q_tpch_q4_late_orders",
-    "q_tpch_q14_promo",
-    "q_tpch_q16_supplier_variety",
-    "q_tpch_q19_disjunctive",
-    "q_tpch_q21_waiting",
-    "q_tpch_q22_idle_rich",
-    "q_tpch_q8_market_share",
-    "q_tpch_q11_important_parts",
-    "q_tpch_q13_custdist",
-    "q_tpch_q15_top_supplier",
-    "q_tpch_q17_small_qty",
-    "q_relational_division",
-    "q_inverted_index",
-    "q_bm25",
-    "q_seq_pack",
-    # oracle rewritten late in round 8: q_bollinger_bands FAILED the
-    # round-gate sf0.1 parity (23/2399 rows — squared-cents window sums
-    # ~6e20, past 2^53, cancellation-amplified; found by the round-8
-    # legacy direct-cast sf1 sweep) and was string-routed immediately. A
-    # measured cross-engine divergence at the gate SF outranks
-    # q_graph_khop's touched-implementation re-queue (same oracle, new
-    # plan, already pinned by local parity at sf0.01 AND sf0.1 every
-    # run) — khop's driver row moves to the round-9 head.
-    "q_bollinger_bands",
-    # oracle rewritten in round 8 (string-routed decimal->double): the 6
-    # high-magnitude migrations plus the 3 r4-vintage refreshers whose
-    # oracles also changed (q_agg_cube/q_join_inner/q_join_star keep
-    # their slots from the original refresh-head plan)
-    "q_agg_cube",
-    "q_join_inner",
-    "q_join_star",
-    "q_agg_group",
-    "q_agg_global",
-    "q_tpch_q6_forecast",
-    "q_tpch_q7_volume",
-    "q_tpch_q9_product_profit",
-    "q_tpch_q18_big_orders",
-)
-
-
-_ROUND7_WINDOW_HISTORY: tuple[str, ...] = (
-    # ---- round-7 rotation: the freshness round, executed exactly as the
-    # round-6 verdict planned it (VERDICT item 4) with the window budgeted
-    # BEFORE any additions (the test_window_budget lint now enforces
-    # this). Slot accounting, 50/50:
-    #   2  q_grouped_trend + q_grouped_trend_sql at the HEAD (round-6
-    #      ADVICE: their shared _TREND_ORACLE was rewritten epoch//→
-    #      date_diff in round 6 but neither was in the round-6 window, so
-    #      the rewritten oracle has never carried a driver-adjudicated
-    #      row);
-    #   2  implementation-touched this round: q_sim_pq_adc (per-subspace
-    #      codegen split, VERDICT item 3) and q_graph_sssp (driver-side
-    #      scalar collect removed, VERDICT item 7);
-    #   7  the round-1-vintage greens (oldest evidence in the repo);
-    #  33  the round-2-vintage ORACLED greens. The two rows-only
-    #      round-2-vintage queries (q_agg_approx, q_sample_stratified)
-    #      cede their slots by the round-5 precedent: a window slot buys
-    #      a rows-only query no stronger evidence — their hard checks
-    #      live in tests/test_approx.py and the oracled bounds twin —
-    #      while an oracled refresh slot buys a value-hash adjudication;
-    #   1  the single query ADDED in round 7: q_stream_join_outer, the
-    #      left-outer stream-stream interval join (VERDICT item 8),
-    #      rows-only with embedded batch-equivalence evidence;
-    #   5  the round-3-vintage refresh backlog head, registration order
-    #      (q_agg_group is also the flagship = entry()). The remaining
-    #      40 round-3-vintage queries lead the round-8 rotation, then
-    #      the round-4-vintage set. Everything outside the window keeps
-    #      sf0.01 oracle parity cover via tests/test_parity.py.
-    # head: rewritten-oracle adjudication debt (round-6 ADVICE)
-    "q_grouped_trend",
-    "q_grouped_trend_sql",
-    # implementation touched in round 7
-    "q_sim_pq_adc",
-    "q_graph_sssp",
-    # round-1-vintage refresh
-    "q_agg_global",
-    "q_join_semi_anti",
-    "q_json_extract",
-    "q_set_union",
-    "q_text_termstats",
-    "q_text_tokens",
-    "q_window_lag",
-    # round-2-vintage oracled refresh
-    "q_agg_filtered",
-    "q_agg_grouping_sets",
-    "q_agg_salted",
-    "q_agg_stats",
-    "q_array_predicates",
-    "q_array_scalars",
-    "q_histogram",
-    "q_join_right",
-    "q_join_salted",
-    "q_knn_join",
-    "q_map_functions",
-    "q_math_scalars",
-    "q_merge_upsert",
-    "q_multimodal_features",
-    "q_multimodal_framesample",
-    "q_null_safe_join",
-    "q_null_semantics",
-    "q_pivot",
-    "q_sample_hash",
-    "q_scan_csv_schema",
-    "q_scan_json",
-    "q_sketch_cms",
-    "q_subquery_correlated",
-    "q_subquery_in",
-    "q_subquery_scalar",
-    "q_tpch_q18_big_orders",
-    "q_tpch_q3_shipping",
-    "q_tpch_q7_volume",
-    "q_udf_vectorized",
-    "q_unpivot",
-    "q_window_firstlast",
-    "q_window_percentrank",
-    "q_window_range",
-    # round-7 addition (the only new query this round)
-    "q_stream_join_outer",
-    # round-3-vintage refresh backlog head, registration order
-    "q_agg_group",
-    "q_agg_rollup",
-    "q_join_outer",
-    "q_window_frame",
-    "q_topk",
-)
-
-
-_ROUND6_WINDOW_HISTORY: tuple[str, ...] = (
-    # ---- round-6 rotation (kept for the rotation audit trail): the
-    # backlog-burn round. Round 5 ended with 47 queries that had NEVER
-    # carried a driver-adjudicated row (the additions outran the 50-slot
-    # window); per the standing rule a never-adjudicated query outranks
-    # any re-refresh, so ALL 47 took slots, in registration order —
-    # including the two whose oracles were red at the end of round 5 and
-    # were fixed in round 6 (q_business_days: DuckDB 1.0.0
-    # epoch(DATE)-is-DOUBLE float math; q_calendarize: lateral
-    # generate_series BinderException, now the scalar UNNEST form).
-    # Slots 48-49 went to the two queries ADDED in round 6
-    # (q_graph_triangles_lsh, q_stream_join); slot 50 started the
-    # displaced refresh backlog with q_agg_distinct. Outcome
-    # (CORRECTNESS_r06.json): 50/50 green, backlog fully burned — after
-    # round 6 every registry query carries at least one
-    # driver-adjudicated row.
-    "q_parse_logs",
-    "q_business_days",
-    "q_dedup_blocking_quality",
-    "q_dedup_minhash_accuracy",
-    "q_source_diversity",
-    "q_stream_dedup",
-    "q_scan_evolved",
-    "q_udtf_chunks",
-    "q_scan_csv_quoted",
-    "q_scan_text",
-    "q_join_asof_nearest",
-    "q_join_asof_tolerance",
-    "q_funnel_steps",
-    "q_peak_concurrency",
-    "q_cdc_apply",
-    "q_survivorship",
-    "q_graph_sssp",
-    "q_mannwhitney",
-    "q_dq_referential",
-    "q_sql_chained_index",
-    "q_compaction_plan",
-    "q_acf",
-    "q_calendarize",
-    "q_capped_runsum",
-    "q_rfm",
-    "q_purchase_intervals",
-    "q_attribution",
-    "q_skyline",
-    "q_xyz_analysis",
-    "q_price_index",
-    "q_item_cf",
-    "q_gini_concentration",
-    "q_spearman_corr",
-    "q_ks_test",
-    "q_bollinger_bands",
-    "q_cusum_changepoint",
-    "q_dow_seasonality",
-    "q_mix_effective_sources",
-    "q_label_window",
-    "q_train_test_split",
-    "q_tv_drift",
-    "q_window_median",
-    "q_feature_hash",
-    "q_lift_curve",
-    "q_window_hampel",
-    "q_spatial_join",
-    "q_spatial_nearest",
-    # round-6 additions (the only two new queries this round):
-    "q_graph_triangles_lsh",
-    "q_stream_join",
-    # refresh backlog, oldest evidence first:
-    "q_agg_distinct",
-)
-
-
-_ROUND5_WINDOW_HISTORY: tuple[str, ...] = (
-    # ---- round-5 rotation (kept for the rotation audit trail). Round 4's
-    # window went 49/49 green (50th is
-    # the rows-only streaming query), so this rotation is pure freshness:
-    # (a) every query that has NEVER carried a driver-adjudicated row —
-    # the five round-4 late additions plus the three new round-5 layout/
-    # pruning queries; (b) the eight queries whose latest green is round 1
-    # (the oldest evidence in the repo); (c) the three queries whose
-    # implementation was touched this round (stop-shingle drop paths, the
-    # JPEG marker-walk fix, the stream-ingest evidence columns); (d) 18 of
-    # the 37 round-2-latest queries. Left out of (d) on purpose:
-    # q_agg_approx / q_sample_stratified are inherently rows-only (a
-    # window slot buys them no stronger evidence — their hard checks live
-    # in tests/test_approx.py and the oracled bounds twin), and
-    # q_math_scalars / q_array_scalars / q_array_predicates /
-    # q_map_functions / q_sample_hash are single-stage scalar/sampling
-    # shapes with plan tests and strict local parity (one slot ceded to
-    # the new q_join_bucketed); twelve more round-2 slots (the TPC-H trio
-    # Q3/Q7/Q18, unpivot/firstlast/percentrank/range-frame windows,
-    # filtered/grouping-sets aggs, histogram, right join, pivot) ceded to
-    # the TWELVE operators ADDED later in round 5 — a never-adjudicated
-    # query outranks re-refreshing a round-2 green, and the displaced
-    # twelve lead the round-6 rotation. Everything outside the window
-    # keeps sf0.01 oracle parity cover via tests/test_parity.py; the 45
-    # round-3-latest queries fill the rest of round 6.
-    # (a) never driver-adjudicated:
-    "q_zorder_layout",
-    "q_bloom_prefilter",
-    "q_scd2_intervals",
-    "q_dq_profile",
-    "q_window_rolling_days",
-    "q_scan_pruned",        # new r5: static partition pruning
-    "q_join_dpp",           # new r5: dynamic partition pruning
-    "q_zorder_pruning",     # new r5: measured z-order read payoff
-    "q_join_bucketed",      # new r5: exchange-free bucketed join
-    "q_ols_regression",     # new r5: closed-form per-group OLS
-    "q_timeseries_gapfill", # new r5: calendar spine + forward fill
-    "q_sim_pq_adc",         # new r5: product-quantization ANN
-    "q_pagerank",           # new r5: fixed-iteration graph rank
-    "q_scan_orc",           # new r5: ORC source
-    "q_join_interval",      # new r5: binned interval-overlap join
-    "q_text_diversity",     # new r5: Simpson char-diversity gate
-    "q_dedup_prefix_filter",   # new r5: AllPairs/PPJoin similarity join
-    "q_outlier_mad",           # new r5: MAD robust outliers
-    "q_chisq_independence",    # new r5: chi-square contingency test
-    "q_agg_bitmap_distinct",   # new r5: bitmap-word exact distinct
-    "q_window_ntile",          # new r5: per-group quartile buckets
-    "q_graph_triangles",       # new r5: near-dup triangle enumeration
-    "q_table_diff",            # new r5: Merkle-style replica diff
-    "q_event_transitions",     # new r5: Markov transition matrix
-    "q_time_weighted_avg",     # new r5: TWAP over irregular samples
-    # (b) never-adjudicated continuation backlog, FIFO by add order. These
-    # eight took the slots VERDICT r4 earmarked for round-1-green
-    # backfill: by the standing rule (a never-adjudicated query outranks
-    # any re-refresh), zero-evidence queries win the tie, and the r1
-    # backfill (q_agg_distinct, q_agg_global, q_join_semi_anti,
-    # q_json_extract, q_set_union, q_text_termstats, q_text_tokens,
-    # q_window_lag) queues behind the remaining backlog for round 6.
-    "q_cohort_ltv",
-    "q_window_cumedist",
-    "q_benford_digits",
-    "q_dq_linenumbers",
-    "q_cumulative_users",
-    "q_event_paths",
-    "q_rolling_distinct_users",
-    "q_wow_growth",
-    # (c) implementation touched in round 5:
-    "q_dedup_minhash_stopshingle",
-    "q_multimodal_decode",
-    "q_stream_ingest",
-    # (e) round-5 continuation operators — never adjudicated, so they
-    # outrank re-refreshing round-2 greens (same rule as (d) above). The
-    # nine displaced round-2 names (q_join_salted, q_knn_join,
-    # q_multimodal_features, q_multimodal_framesample, q_null_safe_join,
-    # q_null_semantics, q_subquery_correlated, q_subquery_in,
-    # q_subquery_scalar) lead the round-6 rotation; all keep sf0.01
-    # oracle parity cover via tests/test_parity.py meanwhile.
-    "q_decayed_avg",
-    "q_timeseries_interpolate",
-    "q_events_anomaly",
-    "q_weighted_median",
-    "q_pareto_abc",
-    "q_dedup_snm",
-    "q_dedup_containment",
-    "q_graph_khop",
-    "q_sample_pps",
-    "q_ab_ttest",
-    "q_winsorized_mean",
-    "q_basket_lift",
-    "q_gaps_islands",
-    "q_rolling_corr",
-    # (d) is empty this round: every round-2 re-refresh slot
-    # (q_merge_upsert, q_scan_json, q_scan_csv_schema, q_sketch_cms,
-    # q_udf_vectorized, plus the nine listed above) ceded to
-    # never-adjudicated operators. Round-6 rotation order: first the
-    # never-adjudicated remainder (q_join_asof_nearest, then the late
-    # round-5 additions q_rfm, q_purchase_intervals, q_attribution,
-    # q_skyline, q_acf, q_mannwhitney, q_source_diversity, q_graph_sssp,
-    # q_scan_evolved, then the distribution-statistics family
-    # q_gini_concentration, q_spearman_corr, q_ks_test,
-    # q_bollinger_bands, q_cusum_changepoint, q_dow_seasonality,
-    # q_mix_effective_sources, then the ML-prep/evaluation families
-    # q_label_window, q_train_test_split, q_tv_drift, q_window_median,
-    # q_dedup_blocking_quality, q_feature_hash, q_lift_curve,
-    # q_funnel_steps, q_xyz_analysis, q_price_index, q_window_hampel,
-    # the closing trio q_spatial_join + q_compaction_plan + q_parse_logs,
-    # and the rows-only q_stream_dedup), then the displaced refresh
-    # backlog (r1 greens before r2 greens). All keep sf0.01 oracle
-    # parity cover via tests/test_parity.py meanwhile.
-)
+    ranked = sorted(enumerate(_REGISTRY.values()), key=rank)
+    return tuple(q.name for _, q in ranked[:DRIVER_SLOTS])
 
 
 def all_queries() -> dict[str, Query]:
-    """Registry in driver-adjudication order.
-
-    Window invariants raise real exceptions (not ``assert``) so a typo'd
-    or stale window name still fails under ``python -O``."""
-    _load_all_modules()
-    if len(DRIVER_WINDOW) > 50:
-        raise ValueError(f"DRIVER_WINDOW has {len(DRIVER_WINDOW)} entries; driver adjudicates only 50")
-    if len(set(DRIVER_WINDOW)) != len(DRIVER_WINDOW):
-        dupes = sorted({n for n in DRIVER_WINDOW if DRIVER_WINDOW.count(n) > 1})
-        raise ValueError(f"duplicate names in DRIVER_WINDOW: {dupes}")
-    missing = [n for n in DRIVER_WINDOW if n not in _REGISTRY]
-    if missing:
-        raise ValueError(f"DRIVER_WINDOW names not registered: {missing}")
-    ordered = {n: _REGISTRY[n] for n in DRIVER_WINDOW}
-    ordered.update((n, q) for n, q in _REGISTRY.items() if n not in ordered)
+    """Registry in driver-adjudication order: ``driver_window()`` first,
+    then every other query in registration order."""
+    ordered = {n: _REGISTRY[n] for n in driver_window()}
+    ordered.update(_REGISTRY)  # existing keys keep their window position
     return ordered
 
 

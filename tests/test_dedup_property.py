@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     SHINGLE_WORDS,
     jaccard_pairs,
-    shingles_from,
+    shingle_arrays,
 )
 
 WORDS = ["aa", "bb", "cc", "dd", "ee"]
@@ -38,7 +38,7 @@ def test_jaccard_matches_python(spark, seed):
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
-        (r.doc_a, r.doc_b): r.jaccard for r in jaccard_pairs(shingles_from(df)).collect()
+        (r.doc_a, r.doc_b): r.jaccard for r in jaccard_pairs(shingle_arrays(df)).collect()
     }
 
     sh = {i: _py_shingles(t) for i, t in docs}
@@ -281,7 +281,7 @@ def test_prefix_filter_matches_exact_join(spark, seed):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in prefix_filter_pairs(shingles_from(df)).collect()
+        for r in prefix_filter_pairs(shingle_arrays(df)).collect()
     }
 
     sh = {i: _py_shingles(t) for i, t in docs}
@@ -309,12 +309,12 @@ def test_prefix_filter_discards_boilerplate_skew(spark):
         for i in range(n)
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    sh = shingles_from(df)
-    n_cands = prefix_candidates(sh).count()
+    shs = shingle_arrays(df)
+    n_cands = prefix_candidates(shs).count()
     # shared-shingle bucket alone would contribute n*(n-1)/2 = 780 pairs
     assert n_cands < n, f"prefix filter failed to discard boilerplate: {n_cands} candidates"
     # and the verified output is exactly empty: no pair reaches J >= 0.5
-    assert prefix_filter_pairs(sh).count() == 0
+    assert prefix_filter_pairs(shs).count() == 0
 
 
 def test_blocking_quality_consistent_with_minhash(spark):
@@ -384,3 +384,20 @@ def test_triangles_lsh_matches_exact_variant(spark):
     assert lsh == exact
     # a<b<c orientation: each triangle exactly once
     assert all(a < b < c for a, b, c in lsh)
+
+
+def test_rp_lsh_code_replaces_input_code_column(spark):
+    """An input that already has a ``code`` column gets it replaced, not
+    duplicated: one ``code`` column, equal to the plain input's code."""
+    from sales_data_pipeline_gcp_spark.operators.dedup import EMBED_DIM, rp_lsh_code
+
+    rng = random.Random(7)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(EMBED_DIM)]) for i in range(4)]
+    plain = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    coded = spark.createDataFrame(
+        [(i, v, -1) for i, v in rows], "vec_id long, embedding array<double>, code bigint"
+    )
+    out = rp_lsh_code(coded)
+    assert out.columns == ["vec_id", "embedding", "code"]
+    expected = {r.vec_id: r.code for r in rp_lsh_code(plain).collect()}
+    assert {r.vec_id: r.code for r in out.collect()} == expected

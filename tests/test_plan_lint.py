@@ -119,11 +119,10 @@ def _committed_adjudications() -> set[str]:
 def test_every_query_has_an_adjudication_slot():
     """Every declared query must have carried (or be scheduled to carry)
     a driver-adjudicated correctness row: it appears in a committed
-    CORRECTNESS_r*.json record or in the current DRIVER_WINDOW. Round 5
-    ended with a 47-query never-adjudicated backlog because additions
-    outran the 50-slot window; this makes silent backlog regrowth
-    structurally impossible — a new query that cannot get a window slot
-    this round fails the suite instead of quietly queueing forever.
+    CORRECTNESS_r*.json record or in the current driver window. Additions
+    that outran the 50-slot window once left 47 queries never
+    adjudicated; with this check a new query that cannot get a window
+    slot this round fails the suite instead of quietly queueing forever.
 
     Known limitation: a query counts as adjudicated forever once its name
     appears in any historical CORRECTNESS record, so this guard catches
@@ -132,10 +131,10 @@ def test_every_query_has_an_adjudication_slot():
     is covered separately by ``test_oracle_rewrite_requeues_adjudication``,
     which keys on (query, oracle-hash) via the committed
     ORACLE_HASHES.json snapshot."""
-    backlog = sorted(set(ALL) - _committed_adjudications() - set(registry.DRIVER_WINDOW))
+    backlog = sorted(set(ALL) - _committed_adjudications() - set(registry.driver_window()))
     assert not backlog, (
         f"{len(backlog)} queries have never been driver-adjudicated and "
-        f"are not in the current DRIVER_WINDOW: {backlog}"
+        f"are not in the current driver window: {backlog}"
     )
 
 
@@ -165,7 +164,7 @@ def test_window_budget_caps_new_additions():
 
 
 #: Maximum allowed age (in rounds) of an oracled query's latest committed
-#: driver adjudication, ASSUMING the planned DRIVER_WINDOW goes green this
+#: driver adjudication, ASSUMING the derived driver window goes green this
 #: round. With ~237 queries, >=40 refresh slots/round, and the oldest-first
 #: rotation, every query is re-adjudicated within ~5 rounds; this lint
 #: fails the suite if the rotation ever stalls instead (round-7 VERDICT
@@ -177,11 +176,12 @@ MAX_ADJUDICATION_AGE_ROUNDS = 5
 def test_adjudication_freshness():
     """Every oracled query's latest committed driver adjudication must be
     within MAX_ADJUDICATION_AGE_ROUNDS of the CURRENT round (the round the
-    planned DRIVER_WINDOW will run in = latest committed round + 1), where
-    a query holding a DRIVER_WINDOW slot counts as current-round fresh.
-    Oldest-first rotation keeps this invariant for free; a stalled or
-    misplanned rotation fails here at commit time, before the driver
-    runs."""
+    driver window will run in = latest committed round + 1), where a
+    query holding a driver-window slot counts as current-round fresh.
+    The derived window's oldest-first rank keeps this invariant while the
+    registry has at most ~MAX_ADJUDICATION_AGE_ROUNDS x 50 queries; past
+    that, or if the window rule regresses, this fails at commit time,
+    before the driver runs."""
     import glob
     import json
     import os
@@ -196,7 +196,7 @@ def test_adjudication_freshness():
             for name in json.load(f):
                 latest[name] = max(latest.get(name, 0), rnd)
     current_round = max(latest.values(), default=0) + 1
-    window = set(registry.DRIVER_WINDOW)
+    window = set(registry.driver_window())
     stale = []
     rows_only_stale = []
     for name, q in sorted(ALL.items()):
@@ -204,9 +204,9 @@ def test_adjudication_freshness():
         age = current_round - effective
         if not q.oracle:
             # rows-only queries hold no refreshable HASH evidence, but
-            # their driver ROWS evidence still ages — round-11 VERDICT
-            # item 2: a relaxed K+1 bound keeps the freshness table free
-            # of lint-excluded stragglers (their hard checks live in the
+            # their driver ROWS evidence still ages: a relaxed K+1 bound
+            # keeps the freshness table free of lint-excluded
+            # stragglers (their hard checks live in the
             # local suite and each run's embedded equivalence proofs, so
             # a driver row is corroboration, not the primary evidence —
             # hence the looser bound).
@@ -218,27 +218,27 @@ def test_adjudication_freshness():
     assert not stale, (
         f"{len(stale)} oracled queries' latest driver adjudication is older "
         f"than {MAX_ADJUDICATION_AGE_ROUNDS} rounds and they hold no "
-        f"DRIVER_WINDOW slot this round (round {current_round}): {stale} — "
+        f"driver-window slot this round (round {current_round}): {stale} — "
         "head the rotation with the oldest-vintage queries"
     )
     assert not rows_only_stale, (
         f"rows-only queries' driver rows evidence is older than "
         f"{MAX_ADJUDICATION_AGE_ROUNDS + 1} rounds and they hold no "
-        f"DRIVER_WINDOW slot this round (round {current_round}): "
+        f"driver-window slot this round (round {current_round}): "
         f"{rows_only_stale} — give each a rows-evidence refresh slot"
     )
 
 
 def test_oracle_rewrite_requeues_adjudication():
     """An oracle rewrite must re-queue its query for driver adjudication
-    (round-6 ADVICE: q_grouped_trend's oracle was rewritten in round 6
-    but the name-keyed slot guard above never re-queued it, so the
-    rewritten oracle shipped with no driver-adjudicated row).
+    (the name-keyed slot guard above cannot: q_grouped_trend's rewritten
+    oracle once shipped with no driver-adjudicated row).
     ORACLE_HASHES.json is the committed snapshot of each oracle's text as
-    last scheduled for adjudication; a query whose current oracle hash
-    differs from the snapshot must hold a DRIVER_WINDOW slot this round
-    (and the snapshot is updated in the same commit that grants the
-    slot)."""
+    of the last committed CORRECTNESS record; a query whose current oracle
+    hash differs from the snapshot must hold a driver-window slot this
+    round (registry.driver_window() ranks such queries first, and the
+    snapshot is refreshed when the round's CORRECTNESS record is
+    committed, not when the slot is granted)."""
     import hashlib
     import json
     import os
@@ -253,12 +253,14 @@ def test_oracle_rewrite_requeues_adjudication():
         if not q.oracle:
             continue
         h = hashlib.sha256(q.oracle.encode()).hexdigest()[:16]
-        if snapshot.get(name) != h and name not in registry.DRIVER_WINDOW:
+        if snapshot.get(name) != h and name not in registry.driver_window():
             stale.append(name)
     assert not stale, (
-        f"oracle text changed since last scheduled adjudication but the "
-        f"query holds no DRIVER_WINDOW slot: {sorted(stale)} — give it a "
-        f"slot and refresh its ORACLE_HASHES.json entry in the same commit"
+        f"oracle text changed since the last committed adjudication but the "
+        f"query holds no driver-window slot: {sorted(stale)} — driver_window() "
+        f"ranks rewritten oracles first, so more oracles changed this round "
+        f"than there are driver slots; refresh ORACLE_HASHES.json when the "
+        f"round's CORRECTNESS record is committed, not when a slot is granted"
     )
 
 
@@ -286,7 +288,7 @@ def test_coverage_count_in_sync():
 #: (see functions/exact.py — sf1 parity caught a 1-ulp divergence past
 #: it); the string-routed ``sql_sum`` is exact at any magnitude. This is
 #: a RATCHET: names may only LEAVE this set as round-9+ migrations land
-#: (each departure needs a DRIVER_WINDOW slot for its oracle rewrite); a
+#: (each departure needs a driver-window slot for its oracle rewrite); a
 #: NEW query must use the string route from birth. Sites audited in the
 #: functions/exact.py migration ledger; the highest-magnitude class
 #: (q_agg_stats / q_ols_regression, ~4.5e16 scaled at sf1) is pinned

@@ -31,13 +31,14 @@ def main() -> None:
         help="also dump PER-ITERATION (pre-checkpoint) plans for iterative "
         "operators: every materialize()/localCheckpoint routed through "
         "operators.dedup.materialize writes its loop-body plan to "
-        "<out>/<query>_<tag>_iters/ (round-12 VERDICT item 6 — a final "
+        "<out>/<query>_<tag>_iters/, numbered from 01 per query (a final "
         "explain of a checkpointed loop is a vacuous scan of the last "
         "checkpoint; the loop-body plans are where Exchange/Join deltas "
         "are visible)",
     )
     args = ap.parse_args()
 
+    from sales_data_pipeline_gcp_spark.operators import dedup
     from sales_data_pipeline_gcp_spark.plans.registry import all_queries
     from sales_data_pipeline_gcp_spark.session import get_spark
 
@@ -46,12 +47,15 @@ def main() -> None:
     all_q = all_queries()
     for name in args.queries:
         if args.iter:
+            dedup._PLAN_DUMP_SEQ = 0
             os.environ["SPARK_GRAFT_PLAN_DUMP_DIR"] = os.path.join(
                 args.out, f"{name}_{args.tag}_iters"
             )
-        df = all_q[name].fn(spark, args.sf_dir)
-        if args.iter:
-            os.environ.pop("SPARK_GRAFT_PLAN_DUMP_DIR", None)
+        try:
+            df = all_q[name].fn(spark, args.sf_dir)
+        finally:
+            if args.iter:
+                os.environ.pop("SPARK_GRAFT_PLAN_DUMP_DIR", None)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
