@@ -213,6 +213,27 @@ def _official_line(queries: dict[str, float], sf: float, extra: dict) -> str:
     return line
 
 
+def run_shard(tmp: str, tag: str, shard: list[str]) -> dict[str, list[float]]:
+    """Measure the ``shard`` queries in a fresh ``--shard-worker`` subprocess
+    (own JVM; its startup is untimed), logging to ``tmp``; returns each
+    query's timed runs."""
+    out = os.path.join(tmp, f"shard_{tag}.json")
+    log = os.path.join(tmp, f"shard_{tag}.log")
+    with open(log, "w") as lf:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--shard-worker", out, *shard],
+            stdout=lf,
+            stderr=subprocess.STDOUT,
+            env=os.environ,
+        )
+    if proc.returncode != 0:
+        with open(log) as lf:
+            tail = lf.read()[-2000:]
+        raise RuntimeError(f"bench shard {tag} failed (rc={proc.returncode}):\n{tail}")
+    with open(out) as f:
+        return json.load(f)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -221,23 +242,6 @@ def main() -> None:
     from sales_data_pipeline_gcp_spark.plans import registry
 
     names = sorted(registry.all_queries())
-
-    def run_shard(tmp: str, tag: str, shard: list[str]) -> dict[str, list[float]]:
-        out = os.path.join(tmp, f"shard_{tag}.json")
-        log = os.path.join(tmp, f"shard_{tag}.log")
-        with open(log, "w") as lf:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--shard-worker", out, *shard],
-                stdout=lf,
-                stderr=subprocess.STDOUT,
-                env=os.environ,
-            )
-        if proc.returncode != 0:
-            with open(log) as lf:
-                tail = lf.read()[-2000:]
-            raise RuntimeError(f"bench shard {tag} failed (rc={proc.returncode}):\n{tail}")
-        with open(out) as f:
-            return json.load(f)
 
     # striped shards over the sorted names (spreads each heavy family
     # across shards instead of clustering it), each measured sequentially
@@ -404,23 +408,7 @@ def isolated_supplement(names: list[str]) -> None:
     iso_runs: dict[str, list[float]] = {}
     with tempfile.TemporaryDirectory(prefix="bench_iso_") as tmp:
         for j in range(0, len(names), 5):
-            shard = names[j : j + 5]
-            out = os.path.join(tmp, f"iso{j // 5}.json")
-            log = out + ".log"
-            with open(log, "w") as lf:
-                proc = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), "--shard-worker", out, *shard],
-                    stdout=lf,
-                    stderr=subprocess.STDOUT,
-                    env=os.environ,
-                )
-            if proc.returncode != 0:
-                with open(log) as lf:
-                    raise RuntimeError(
-                        f"isolated shard failed (rc={proc.returncode}):\n{lf.read()[-2000:]}"
-                    )
-            with open(out) as f:
-                iso_runs.update(json.load(f))
+            iso_runs.update(run_shard(tmp, f"iso{j // 5}", names[j : j + 5]))
     window = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
     here = os.path.dirname(os.path.abspath(__file__))
     raw_dir = os.path.join(here, ".bench")

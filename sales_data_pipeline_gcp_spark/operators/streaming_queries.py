@@ -11,11 +11,12 @@ exactly-once for the file-ingest pipeline.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import tempfile
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from sales_data_pipeline_gcp_spark.io import NS_PER_SECOND, load
 from sales_data_pipeline_gcp_spark.plans.registry import register
@@ -29,65 +30,121 @@ from sales_data_pipeline_gcp_spark.streaming.windows import (
     tumbling_counts,
 )
 
-#: Shuffle/state-store partition count for the DEMO streams below. A
-#: stateful streaming operator creates — and commits one delta file for,
+#: Shuffle/state-store partition count for the stateful demo streams below.
+#: A stateful streaming operator creates — and commits one delta file for,
 #: per micro-batch — one state store per shuffle partition (a stream-stream
-#: join holds FOUR stores per partition), and the count is pinned by the
-#: first checkpoint, so it is a per-pipeline sizing decision, not a session
-#: constant. Sizing follows guide §2.2 (partition count from state volume,
-#: not core count): these demo streams hold <= 240 rows of state, where the
-#: session's batch-sized shuffle partitioning spends ~20x more wall-clock
-#: on empty state-store commits than on data (measured round 12: the two
-#: stream-stream joins alone billed 13.8s/sweep, ~90% state-store commit
-#: I/O). Production pipelines size this to state volume / guide §2.2's
-#: 100 MB–1 GB per partition and override via this env var; the batch
-#: surface (everything outside ``_stream_partitions``) keeps the session
-#: default, so the driver's bench comparability is untouched.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
-)
+#: join holds FOUR stores per partition), and the first checkpoint pins the
+#: count, so it is a per-pipeline sizing decision, not a session constant.
+#: Sizing follows guide §2.2 (partition count from state volume, not core
+#: count): these streams hold <= 240 rows of state, where a batch-sized
+#: shuffle partitioning spends ~20x more wall-clock on empty state-store
+#: commits than on data (the two stream-stream joins billed 13.8 s a sweep
+#: at the session default, ~90% of it state-store commit I/O; 1 partition
+#: measured slower than 2). Production pipelines size this to state volume
+#: at guide §2.2's 100 MB–1 GB per partition.
+STREAM_STATE_PARTITIONS = 2
 
 
-@contextlib.contextmanager
-def _stream_partitions(
-    spark: SparkSession,
-    n: int = STREAM_STATE_PARTITIONS,
-    *,
-    final_no_data_batch: bool = True,
-):
-    """Pin ``spark.sql.shuffle.partitions`` (= streaming state partitions)
-    around a stream's build/start/drain; restores the session value for the
-    batch surface. The conf is read when the streaming query STARTS, so the
-    whole start+awaitTermination must sit inside.
+def _stream_session(spark: SparkSession, *, final_no_data_batch: bool = True) -> SparkSession:
+    """A private session for building, starting and draining one demo
+    stream: ``spark.newSession()`` shares the SparkContext but owns its SQL
+    conf, so the stream's settings never leak into the caller's session
+    (another thread on it keeps reading its own values mid-drain).
 
-    ``final_no_data_batch=False`` additionally disables
-    ``spark.sql.streaming.noDataMicroBatches.enabled`` for the scope: an
-    AvailableNow drain otherwise appends one empty micro-batch after the
-    data batches purely to advance the watermark and evict state — a full
-    trigger cycle (planning + state-store commits + sink commit, measured
-    ~0.5-0.9s/batch round 13) that writes NOTHING for operators whose sink
-    content is watermark-INDEPENDENT. That is exactly the eager-emission
-    class: stream-stream INNER joins and dropDuplicates(WithinWatermark)
-    emit rows the moment they are seen; only watermark-GATED emission
-    (outer-join NULLs, append-mode aggregations) needs the final batch, and
-    those streams must keep the default. Correctness evidence: the embedded
-    rows/hash batch-equivalence columns are computed per run, and
-    tests/test_streaming.py pins the semantics.
+    Every modifiable key of the caller's conf is copied in first, so the
+    stream parses and computes exactly as the caller's batch twin does
+    (a runtime-set session timezone, for one, decides how CSV timestamps
+    parse; without the copy the stream would read them in the context's
+    default zone and ``hash_match`` would go false). Then the shuffle
+    partitions — read when a streaming query STARTS and pinned in its
+    checkpoint — are set to ``STREAM_STATE_PARTITIONS``.
 
-    NOTE: both settings mutate session-global conf for the scope's
-    duration; the bench driver runs queries single-threaded, which this
-    (and every scoped conf in the repo) assumes — a multi-threaded driver
-    would need a lock here."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    ``final_no_data_batch=False`` also disables
+    ``spark.sql.streaming.noDataMicroBatches.enabled``: an AvailableNow
+    drain otherwise appends one empty micro-batch after the data batches
+    purely to advance the watermark and evict state — a full trigger cycle
+    (planning + state-store commits + sink commit, ~0.5-0.9 s) that writes
+    NOTHING for operators whose sink content is watermark-INDEPENDENT. That
+    is exactly the eager-emission class: stream-stream INNER joins and
+    dropDuplicatesWithinWatermark emit rows the moment they are seen; only
+    watermark-GATED emission (outer-join NULLs, append-mode aggregations)
+    needs the final batch, and those streams keep the default."""
+    session = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            session.conf.set(key, value)
+    session.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     if not final_no_data_batch:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", old_ndb)
+        session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    return session
+
+
+def _demo_dirs(prefix: str, *inputs: str) -> list[str]:
+    """A fresh temp dir holding the created input dirs; returns their paths
+    followed by the (not yet created) sink and checkpoint paths."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    for d in inputs:
+        os.makedirs(os.path.join(base, d))
+    return [os.path.join(base, d) for d in (*inputs, "out", "ckpt")]
+
+
+def _write_csv(path: str, header: str, lines: Iterable[str]) -> None:
+    with open(path, "w") as f:
+        f.write(header + "\n")
+        f.writelines(line + "\n" for line in lines)
+
+
+def _csv(reader, schema: str, path: str) -> DataFrame:
+    """``reader`` is ``spark.read`` (batch twin) or ``spark.readStream``."""
+    return reader.schema(schema).option("header", "true").csv(path)
+
+
+def _drain(stream: DataFrame, out: str, ckpt: str) -> None:
+    """Append ``stream`` to parquet at ``out`` until every pending input
+    file is consumed (AvailableNow), checkpointed at ``ckpt``."""
+    (
+        stream.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _with_evidence(sink: DataFrame, batch: DataFrame) -> DataFrame:
+    """Every ``sink`` row plus the batch-equivalence evidence of the stream
+    that wrote it: stream_rows / batch_rows / rows_match / hash_match
+    against ``batch``, the same pipeline run as one batch over the same
+    input. The content hash is order-independent: the sum of per-row
+    xxhash64 over a NULL-marked concat of the sorted columns, summed in
+    DECIMAL so ANSI overflow cannot bite. A harness can only rows-check a
+    streaming query, so a recorded row with hash_match=false is the hard
+    evidence of divergence."""
+
+    def summary(df: DataFrame, p: str) -> DataFrame:
+        row_str = F.concat_ws(
+            "\x1f",
+            *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
+        )
+        return df.agg(
+            F.count("*").alias(f"{p}_rows"),
+            F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
+                f"{p}_hash"
+            ),
+        )
+
+    evidence = (
+        summary(sink, "stream")
+        .crossJoin(F.broadcast(summary(batch, "batch")))
+        .select(
+            "stream_rows",
+            "batch_rows",
+            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
+            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
+        )
+    )
+    return sink.crossJoin(F.broadcast(evidence))
 
 
 _TUMBLE_SEC = TUMBLE_MINUTES * 60
@@ -179,7 +236,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline, checkpointed parquet append (exactly-once upgrade over the "
     "reference's at-least-once, SURVEY.md §2.2.6). The driver can only "
     "rows-check this query, so the batch-equivalence proof is embedded in "
-    "the OUTPUT itself (round-4 VERDICT item 6): every sink row carries "
+    "the OUTPUT itself: every sink row carries "
     "stream_rows / batch_rows / rows_match / hash_match columns comparing "
     "the streamed sink against the same cleaning pipeline run as one "
     "batch over the same CSVs — order-independent content hash (sum of "
@@ -190,51 +247,17 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from sales_data_pipeline_gcp_spark.cleaning import clean_sales
     from sales_data_pipeline_gcp_spark.io import read_sales_csv
     from sales_data_pipeline_gcp_spark.sources.sales import generate_rows, write_csv
     from sales_data_pipeline_gcp_spark.streaming.ingest import ingest_sales_stream
 
-    base = tempfile.mkdtemp(prefix="ingest_demo_")
-    raw = os.path.join(base, "raw")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(raw)
+    raw, out, ckpt = _demo_dirs("ingest_demo_", "raw")
     for i, n in enumerate((40, 60)):
         write_csv(os.path.join(raw, f"sales_{i}.csv"), generate_rows(n, seed=100 + i))
     ingest_sales_stream(spark, raw, out, ckpt, audit=False).awaitTermination()
-
-    sink = spark.read.parquet(out)
     batch = clean_sales(read_sales_csv(spark, raw), audit=False)
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[
-                F.coalesce(F.col(c).cast("string"), F.lit("\\N"))
-                for c in sorted(df.columns)
-            ],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(
-                F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)
-            ).alias(f"{p}_hash"),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    return _with_evidence(spark.read.parquet(out), batch)
 
 
 @register(
@@ -287,73 +310,25 @@ STREAM_DEDUP_OVERLAP = 20
     tags=("streaming", "dedup"),
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    base = tempfile.mkdtemp(prefix="stream_dedup_")
-    raw = os.path.join(base, "raw")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(raw)
+    raw, out, ckpt = _demo_dirs("stream_dedup_", "raw")
 
     def row(i: int) -> str:
         # deterministic, duplicate-stable content: re-delivery is byte-equal
         return f"{i},2026-01-01 00:{i // 60:02d}:{i % 60:02d},{(i * 7) % 100}.25"
 
     n, k = STREAM_DEDUP_ROWS, STREAM_DEDUP_OVERLAP
-    with open(os.path.join(raw, "batch_0.csv"), "w") as f:
-        f.write("event_id,ts,value\n")
-        f.writelines(row(i) + "\n" for i in range(n))
-    with open(os.path.join(raw, "batch_1.csv"), "w") as f:
-        f.write("event_id,ts,value\n")
-        f.writelines(row(i) + "\n" for i in range(n - k, 2 * n - k))
+    for name, ids in (("batch_0.csv", range(n)), ("batch_1.csv", range(n - k, 2 * n - k))):
+        _write_csv(os.path.join(raw, name), "event_id,ts,value", map(row, ids))
 
     schema = "event_id BIGINT, ts TIMESTAMP, value DOUBLE"
     # dropDuplicatesWithinWatermark emits every survivor the moment it is
     # first seen — the sink never depends on watermark advancement, so the
     # final no-data micro-batch is pure state-eviction overhead here
-    with _stream_partitions(spark, final_no_data_batch=False):
-        src = spark.readStream.schema(schema).option("header", "true").csv(raw)
-        deduped = src.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(["event_id"])
-        (
-            deduped.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    sink = spark.read.parquet(out)
-    batch = (
-        spark.read.schema(schema)
-        .option("header", "true")
-        .csv(raw)
-        .dropDuplicates(["event_id"])
-    )
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
-                f"{p}_hash"
-            ),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    stream = _csv(_stream_session(spark, final_no_data_batch=False).readStream, schema, raw)
+    deduped = stream.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(["event_id"])
+    _drain(deduped, out, ckpt)
+    batch = _csv(spark.read, schema, raw).dropDuplicates(["event_id"])
+    return _with_evidence(spark.read.parquet(out), batch)
 
 
 #: Stream-stream join demo sizing: views/purchases per source file, user
@@ -361,6 +336,31 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_JOIN_ROWS = 120
 STREAM_JOIN_USERS = 40
 STREAM_JOIN_HORIZON_MIN = 10
+#: Columns of the views and purchases CSVs of both stream-stream join demos.
+_JOIN_CSV_HEADER = "user_id,ts,event_id"
+_JOIN_SCHEMA = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
+
+
+def _interval_join(vdf: DataFrame, pdf: DataFrame, how: str) -> DataFrame:
+    """Each view joined (``how``) to its user's purchases made within
+    ``STREAM_JOIN_HORIZON_MIN`` minutes after it; the same expression runs
+    on the streams and on their batch twin."""
+    v = vdf.select("user_id", F.col("ts").alias("v_ts"), F.col("event_id").alias("view_id"))
+    p = pdf.select(
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+        F.col("event_id").alias("purchase_id"),
+    )
+    return v.join(
+        p,
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("v_ts"))
+        & (
+            F.col("p_ts")
+            <= F.col("v_ts") + F.expr(f"INTERVAL {STREAM_JOIN_HORIZON_MIN} MINUTES")
+        ),
+        how,
+    ).select("user_id", "view_id", "purchase_id")
 
 
 @register(
@@ -385,14 +385,7 @@ STREAM_JOIN_HORIZON_MIN = 10
     tags=("streaming", "join"),
 )
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    base = tempfile.mkdtemp(prefix="stream_join_")
-    vdir, pdir = os.path.join(base, "views"), os.path.join(base, "purchases")
-    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    os.makedirs(vdir)
-    os.makedirs(pdir)
-
+    vdir, pdir, out, ckpt = _demo_dirs("stream_join_", "views", "purchases")
     n, u = STREAM_JOIN_ROWS, STREAM_JOIN_USERS
 
     def view_row(i: int) -> str:
@@ -406,93 +399,19 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return f"{j % u},2026-01-01 {t // 60:02d}:{t % 60:02d}:00,{500 + j}"
 
     # two micro-batch files per side so matches span file boundaries
-    for name, lo, hi, mk in (
-        ("v_0.csv", 0, n // 2, view_row),
-        ("v_1.csv", n // 2, n, view_row),
-    ):
-        with open(os.path.join(vdir, name), "w") as f:
-            f.write("user_id,ts,event_id\n")
-            f.writelines(mk(i) + "\n" for i in range(lo, hi))
-    for name, lo, hi, mk in (
-        ("p_0.csv", 0, n // 2, purchase_row),
-        ("p_1.csv", n // 2, n, purchase_row),
-    ):
-        with open(os.path.join(pdir, name), "w") as f:
-            f.write("user_id,ts,event_id\n")
-            f.writelines(mk(j) + "\n" for j in range(lo, hi))
-
-    schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
-
-    def interval_join(vdf: DataFrame, pdf: DataFrame) -> DataFrame:
-        v = vdf.select("user_id", F.col("ts").alias("v_ts"), F.col("event_id").alias("view_id"))
-        p = pdf.select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        return v.join(
-            p,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (
-                F.col("p_ts")
-                <= F.col("v_ts") + F.expr(f"INTERVAL {STREAM_JOIN_HORIZON_MIN} MINUTES")
-            ),
-        ).select("user_id", "view_id", "purchase_id")
+    for d, side, mk in ((vdir, "v", view_row), (pdir, "p", purchase_row)):
+        for part, ids in enumerate((range(n // 2), range(n // 2, n))):
+            _write_csv(os.path.join(d, f"{side}_{part}.csv"), _JOIN_CSV_HEADER, map(mk, ids))
 
     # INNER stream-stream joins emit eagerly — the sink never depends on
     # watermark advancement (the watermark only bounds STATE here), so the
     # final no-data micro-batch is pure state-eviction overhead
-    with _stream_partitions(spark, final_no_data_batch=False):
-        vstream = (
-            spark.readStream.schema(schema)
-            .option("header", "true")
-            .csv(vdir)
-            .withWatermark("ts", "30 minutes")
-        )
-        pstream = (
-            spark.readStream.schema(schema)
-            .option("header", "true")
-            .csv(pdir)
-            .withWatermark("ts", "30 minutes")
-        )
-        (
-            interval_join(vstream, pstream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    sink = spark.read.parquet(out)
-    read = lambda d: spark.read.schema(schema).option("header", "true").csv(d)
-    batch = interval_join(read(vdir), read(pdir))
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
-                f"{p}_hash"
-            ),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    session = _stream_session(spark, final_no_data_batch=False)
+    stream = lambda d: _csv(session.readStream, _JOIN_SCHEMA, d).withWatermark("ts", "30 minutes")
+    _drain(_interval_join(stream(vdir), stream(pdir), "inner"), out, ckpt)
+    read = lambda d: _csv(spark.read, _JOIN_SCHEMA, d)
+    batch = _interval_join(read(vdir), read(pdir), "inner")
+    return _with_evidence(spark.read.parquet(out), batch)
 
 
 #: Left-outer stream-stream demo sizing: views per source file, user fan-in
@@ -534,110 +453,35 @@ STREAM_OUTER_HEARTBEAT_USER = 9_000
     tags=("streaming", "join"),
 )
 def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    base = tempfile.mkdtemp(prefix="stream_join_outer_")
-    vdir, pdir = os.path.join(base, "views"), os.path.join(base, "purchases")
-    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    os.makedirs(vdir)
-    os.makedirs(pdir)
-
+    vdir, pdir, out, ckpt = _demo_dirs("stream_join_outer_", "views", "purchases")
     n, u, hb = STREAM_OUTER_ROWS, STREAM_OUTER_USERS, STREAM_OUTER_HEARTBEAT_USER
 
     def ts(minute: int) -> str:
         return f"2026-01-01 {minute // 60:02d}:{minute % 60:02d}:00"
 
-    with open(os.path.join(vdir, "v_0.csv"), "w") as f:
-        f.write("user_id,ts,event_id\n")
-        f.writelines(f"{i % u},{ts(2 * i)},{100 + i}\n" for i in range(n))
-    with open(os.path.join(pdir, "p_0.csv"), "w") as f:
-        f.write("user_id,ts,event_id\n")
-        # purchases for EVEN views only, 3 minutes after the view --
-        # inside the horizon; odd views are provably unmatched
-        f.writelines(f"{j % u},{ts(2 * j + 3)},{500 + j}\n" for j in range(0, n, 2))
+    views = (f"{i % u},{ts(2 * i)},{100 + i}" for i in range(n))
+    _write_csv(os.path.join(vdir, "v_0.csv"), _JOIN_CSV_HEADER, views)
+    # purchases for EVEN views only, 3 minutes after the view -- inside the
+    # horizon; odd views are provably unmatched
+    purchases = (f"{j % u},{ts(2 * j + 3)},{500 + j}" for j in range(0, n, 2))
+    _write_csv(os.path.join(pdir, "p_0.csv"), _JOIN_CSV_HEADER, purchases)
     # Far-future heartbeats on BOTH streams: the query watermark is the
     # MIN across all watermarked inputs, so both sides must advance for
     # the final watermark to pass v_ts + horizon and release the NULL
-    # rows. Heartbeats ride in the SAME micro-batch as the data (round
-    # 13): a watermark is computed from a batch's max event time and
-    # applied only from the NEXT batch on, so heartbeats sharing the data
-    # batch cannot late-drop any real row — the drain is one data batch
-    # plus the final no-data batch that emits the watermark-gated NULL
-    # rows, instead of the round-12 shape's three (maxFilesPerTrigger=1
-    # + forced mtimes serialized the heartbeats into their own batch,
-    # one full trigger cycle of pure overhead; output proven identical
-    # by the embedded rows/hash evidence and the pinned semantics tests).
-    hb_minute = 2 * n + 240
+    # rows. Heartbeats ride in the SAME micro-batch as the data: a
+    # watermark is computed from a batch's max event time and applied only
+    # from the NEXT batch on, so heartbeats sharing the data batch cannot
+    # late-drop any real row — the drain is one data batch plus the final
+    # no-data batch that emits the watermark-gated NULL rows (a heartbeat
+    # batch of its own would cost one full trigger cycle of pure overhead).
+    hb_ts = ts(2 * n + 240)
     for d, uid in ((vdir, hb), (pdir, hb + 1)):
-        p = os.path.join(d, "z_heartbeat.csv")
-        with open(p, "w") as f:
-            f.write("user_id,ts,event_id\n")
-            f.write(f"{uid},{ts(hb_minute)},{900_000}\n")
+        _write_csv(os.path.join(d, "z_heartbeat.csv"), _JOIN_CSV_HEADER, [f"{uid},{hb_ts},900000"])
 
-    schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
-
-    def interval_join(vdf: DataFrame, pdf: DataFrame) -> DataFrame:
-        v = vdf.select("user_id", F.col("ts").alias("v_ts"), F.col("event_id").alias("view_id"))
-        p = pdf.select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        return v.join(
-            p,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (
-                F.col("p_ts")
-                <= F.col("v_ts") + F.expr(f"INTERVAL {STREAM_JOIN_HORIZON_MIN} MINUTES")
-            ),
-            "left_outer",
-        ).select("user_id", "view_id", "purchase_id")
-
-    def stream(d: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("header", "true")
-            .csv(d)
-            .withWatermark("ts", "30 minutes")
-        )
-
-    with _stream_partitions(spark):
-        (
-            interval_join(stream(vdir), stream(pdir))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
+    session = _stream_session(spark)
+    stream = lambda d: _csv(session.readStream, _JOIN_SCHEMA, d).withWatermark("ts", "30 minutes")
+    _drain(_interval_join(stream(vdir), stream(pdir), "left_outer"), out, ckpt)
     real = F.col("user_id") < u  # heartbeat rows excluded on both engines
-    sink = spark.read.parquet(out).filter(real)
-    read = lambda d: spark.read.schema(schema).option("header", "true").csv(d)
-    batch = interval_join(read(vdir), read(pdir)).filter(real)
-
-    def summary(df: DataFrame, p: str) -> DataFrame:
-        row_str = F.concat_ws(
-            "\x1f",
-            *[F.coalesce(F.col(c).cast("string"), F.lit("\\N")) for c in sorted(df.columns)],
-        )
-        return df.agg(
-            F.count("*").alias(f"{p}_rows"),
-            F.coalesce(F.sum(F.xxhash64(row_str).cast("decimal(38,0)")), F.lit(0)).alias(
-                f"{p}_hash"
-            ),
-        )
-
-    evidence = (
-        summary(sink, "stream")
-        .crossJoin(F.broadcast(summary(batch, "batch")))
-        .select(
-            "stream_rows",
-            "batch_rows",
-            (F.col("stream_rows") == F.col("batch_rows")).alias("rows_match"),
-            (F.col("stream_hash") == F.col("batch_hash")).alias("hash_match"),
-        )
-    )
-    return sink.crossJoin(F.broadcast(evidence))
+    read = lambda d: _csv(spark.read, _JOIN_SCHEMA, d)
+    batch = _interval_join(read(vdir), read(pdir), "left_outer").filter(real)
+    return _with_evidence(spark.read.parquet(out).filter(real), batch)

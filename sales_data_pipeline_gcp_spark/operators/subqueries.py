@@ -12,13 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_gcp_spark.io import load
+from sales_data_pipeline_gcp_spark.io import load, register_views
 from sales_data_pipeline_gcp_spark.plans.registry import register
-
-
-def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    for t in tables:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 @register(
@@ -35,7 +30,7 @@ def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
     tags=("subquery",),
 )
 def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(
         # STRING, not VARCHAR: Spark's parser rejects bare VARCHAR (needs a
         # length) while the oracle's dialect spells the same string route
@@ -64,7 +59,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery",),
 )
 def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(
         """
         SELECT o.o_custkey, o.o_orderkey, o.o_totalprice
@@ -89,7 +84,7 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery",),
 )
 def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "part", "lineitem")
+    register_views(spark, sf_dir, ("part", "lineitem"))
     return spark.sql(
         """
         SELECT p_partkey, p_brand

@@ -5,7 +5,10 @@ collisions)."""
 
 from __future__ import annotations
 
+import time
 from concurrent.futures import ThreadPoolExecutor
+
+import pytest
 
 from sales_data_pipeline_gcp_spark.plans import registry
 
@@ -31,3 +34,29 @@ def test_parallel_query_execution(spark, sf_dir):
         results = dict(ex.map(run, NAMES * 2))
     assert set(results) == set(NAMES)
     assert all(v > 0 for v in results.values())
+
+
+#: Session keys a stateful demo stream sets for its own drain.
+STREAM_KEYS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+@pytest.mark.parametrize("name", ["q_stream_dedup", "q_stream_join", "q_stream_join_outer"])
+def test_stream_conf_does_not_leak_into_caller(spark, sf_smoke_dir, name):
+    """A stateful demo stream drains with its own shuffle-partition count
+    (and, for eager-emission streams, without the final no-data batch); a
+    neighbour on the caller's session must never see those settings, and
+    the caller's conf must be identical afterwards."""
+    before = dict(spark.conf.getAll)
+    own = tuple(spark.conf.get(k) for k in STREAM_KEYS)
+    seen = set()
+    with ThreadPoolExecutor(max_workers=1) as ex:
+        fut = ex.submit(lambda: registry.all_queries()[name].fn(spark, sf_smoke_dir).count())
+        while not fut.done():
+            seen.add(tuple(spark.conf.get(k) for k in STREAM_KEYS))
+            time.sleep(0.005)
+        assert fut.result() > 0
+    assert seen <= {own}, f"caller saw {seen - {own}} while {name} drained"
+    assert dict(spark.conf.getAll) == before

@@ -136,6 +136,20 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert got == [1, 2, 3]
 
 
+def test_stream_ingest_batch_equivalence(spark, sf_smoke_dir):
+    """The declared file-ingest stream cleans the simulator's 40- and
+    60-row drops (every fifth generated row has price, quantity and total
+    all NULL and is dropped, leaving 32 + 48), and every sink row must
+    carry a green embedded-evidence tuple (stream sink == one batch
+    cleaning run over the same CSVs)."""
+    from sales_data_pipeline_gcp_spark.operators.streaming_queries import q_stream_ingest
+
+    rows = q_stream_ingest(spark, sf_smoke_dir).collect()
+    assert len(rows) == 80
+    assert all(r.stream_rows == r.batch_rows == 80 for r in rows)
+    assert all(r.rows_match and r.hash_match for r in rows)
+
+
 def test_stream_dedup_bounded_state_equivalence(spark):
     from sales_data_pipeline_gcp_spark.operators.streaming_queries import (
         STREAM_DEDUP_OVERLAP,
@@ -190,3 +204,23 @@ def test_stream_join_outer_batch_equivalence(spark):
     assert all(r.view_id % 2 == 0 and r.purchase_id == r.view_id + 400 for r in matched)
     assert all(r.view_id % 2 == 1 for r in unmatched)
     assert all(r.rows_match and r.hash_match for r in rows)
+
+
+def test_stateful_streams_match_batch_under_caller_timezone(spark, sf_smoke_dir):
+    """The stateful demo streams drain in a private session, but their
+    batch twins run on the caller's: the private session must carry the
+    caller's runtime conf, or a caller whose session timezone differs from
+    the context default would parse the stream's CSV timestamps in another
+    zone than the batch twin and flip hash_match."""
+    from sales_data_pipeline_gcp_spark.operators.streaming_queries import (
+        q_stream_dedup,
+        q_stream_join,
+        q_stream_join_outer,
+    )
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", "America/New_York")
+    for q in (q_stream_dedup, q_stream_join, q_stream_join_outer):
+        rows = q(caller, sf_smoke_dir).collect()
+        assert rows, q.__name__
+        assert all(r.rows_match and r.hash_match for r in rows), q.__name__
