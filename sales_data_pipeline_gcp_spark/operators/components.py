@@ -23,9 +23,11 @@ a third, completely independent formulation of the same fixpoint.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from sales_data_pipeline_gcp_spark.functions.exact import dec
 from sales_data_pipeline_gcp_spark.io import fan_out, load
 from sales_data_pipeline_gcp_spark.operators.dedup import (
     _JACCARD_PAIRS_SQL,
@@ -38,6 +40,25 @@ from sales_data_pipeline_gcp_spark.operators.dedup import (
 from sales_data_pipeline_gcp_spark.plans.registry import register
 
 MAX_ITERATIONS = 20
+
+
+def fixpoint(
+    state: DataFrame, step, *, label: str, max_rounds: int, metrics=(), done=None
+) -> tuple[DataFrame, bool]:
+    """``state = step(state, i)`` for rounds i = 1..max_rounds; returns
+    ``(state, converged)``. Each round is one eager labelled checkpoint, so
+    round k never replays rounds 1..k-1. ``metrics`` ride on that checkpoint
+    job through an unnamed Observation (UUID-named, so concurrent queries on
+    one session cannot collide) and ``done(metrics, i, prev, state)`` stops
+    the loop: the convergence test runs no job of its own."""
+    for i in range(1, max_rounds + 1):
+        obs, nxt = Observation(), step(state, i)
+        if metrics:
+            nxt = nxt.observe(obs, *metrics)
+        prev, state = state, materialize(nxt, label=label)
+        if done and done(obs.get, i, prev, state):
+            return state, True
+    return state, False
 
 
 def connected_components(
@@ -60,29 +81,27 @@ def connected_components(
         sym.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node")),
         label="labelprop_seed",
     )
-    for _ in range(max_iterations):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select("node", F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("label"))
+        # old and new label share this row, so the changed flag is in-row
+        return labels.join(neighbor_min, "node", "left").select(
+            "node",
+            F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("label"),
+            F.coalesce(F.col("nmin") < F.col("label"), F.lit(False)).alias("changed"),
         )
-        # localCheckpoint truncates the exponentially-growing lineage; the
-        # convergence check is the honest fixpoint test
-        new_labels = materialize(new_labels, label="labelprop_iter")
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
+
+    labels, converged = fixpoint(
+        labels, step, label="labelprop_iter", max_rounds=max_iterations,
+        metrics=(F.count_if("changed").alias("changed"),), done=lambda m, *_: m["changed"] == 0,
+    )
+    if not converged:
+        raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")
+    return labels.select("node", "label")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -99,8 +118,6 @@ def _large_star(e: DataFrame) -> DataFrame:
     duplicates: the one caller feeds it straight to ``_small_star``, which
     starts with a ``distinct``. Both skipped distincts are full edge-set
     exchanges (guide §2.4: remove shuffles outright)."""
-    from pyspark.sql import Window as W
-
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # ONE u-keyed exchange feeds the window (guide §2.4): m(u) = min over
     # the u-partition is a WINDOW, not a groupBy+self-join — the join
@@ -123,11 +140,9 @@ def _small_star(e: DataFrame) -> DataFrame:
     then for every node u re-hang u and all its smaller neighbors off
     m(u) = min(smaller neighbors). Output is DISTINCT and strictly
     oriented u > v (rehung: u = v_old >= m with equality filtered; self
-    edge: u > v >= m) — the duplicate-free invariant the contraction
-    loop's count-equality + one-sided exceptAll fixpoint test relies on
-    (round-12 ADVICE: guard the invariant where it is produced)."""
-    from pyspark.sql import Window as W
-
+    edge: u > v >= m). The contraction loop's fixpoint test (equal
+    cardinality, then a one-sided exceptAll) is exact only on distinct
+    edge sets, so the invariant is guaranteed here, where it is produced."""
     # same one-exchange sharing as _large_star: the u-keyed repartition
     # satisfies the distinct's (u,v) clustering and the m(u) window; no
     # groupBy+join, so no upstream re-execution for a broadcast build.
@@ -156,8 +171,8 @@ def connected_components_star(
     """(node, label) via alternating large-star/small-star contraction —
     converges in O(log^2 n) rounds independent of diameter (module
     docstring). Fixpoint test: the oriented edge set is unchanged by a
-    full round (set equality via exceptAll counts, not a heuristic).
-    Raises if ``max_rounds`` is hit — never silently wrong."""
+    full round (set equality, not a heuristic). Raises if ``max_rounds``
+    is hit — never silently wrong."""
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -166,27 +181,26 @@ def connected_components_star(
     )
     # checkpoint the edges FIRST so nodes/rounds don't re-run the upstream
     # pair pipeline (same contract as connected_components)
-    e = materialize(e, label="cc_star_edges")
-    cur = e
-    n_cur = cur.count()
-    for _ in range(max_rounds):
-        # ``cur`` is DISTINCT and strictly oriented u > v (the initial
-        # greatest/least distinct, then _small_star's output invariant) —
-        # _large_star's precondition, which lets the fused round skip two
-        # full edge-set exchanges (= two AQE stage-jobs, guide §2.4)
-        nxt = materialize(_small_star(_large_star(cur)), label="cc_star_round")
-        # set-equality fixpoint test, cheapened (guide §2.4): both rounds'
-        # edge sets are ``.distinct()`` outputs, so equality ⇔ equal
-        # cardinality AND empty one-sided difference. Counting the (already
-        # checkpointed) new set is near-free, and the exceptAll pass runs
-        # only when the counts match — non-final rounds skip it entirely
-        # (the previous shape paid TWO full exceptAll shuffles per round).
-        n_nxt = nxt.count()
-        changed = 1 if n_nxt != n_cur else nxt.exceptAll(cur).count()
-        cur, n_cur = nxt, n_nxt
-        if changed == 0:
-            break
-    else:
+    n_edges = F.count("*").alias("n")
+    seen = Observation()
+    e = materialize(e.observe(seen, n_edges), label="cc_star_edges")
+    n_prev = seen.get["n"]
+
+    def done(m: dict, _: int, prev: DataFrame, cur: DataFrame) -> bool:
+        # distinct edge sets are equal iff their counts tie and the
+        # one-sided difference is empty, which is counted on a tie only
+        nonlocal n_prev
+        tie, n_prev = m["n"] == n_prev, m["n"]
+        return tie and cur.exceptAll(prev).count() == 0
+
+    # every state is DISTINCT and strictly oriented u > v (the seed's
+    # greatest/least distinct, then _small_star's output invariant) —
+    # _large_star's precondition
+    cur, converged = fixpoint(
+        e, lambda cur, _: _small_star(_large_star(cur)), label="cc_star_round",
+        max_rounds=max_rounds, metrics=(n_edges,), done=done,
+    )
+    if not converged:
         raise RuntimeError(f"connected_components_star did not converge in {max_rounds} rounds")
     # at fixpoint ``cur`` is a star forest: (child, root). Roots appear
     # only on the right side; give them self-labels. ``nodes`` is derived
@@ -342,8 +356,6 @@ _PR_ORACLE = (
     tags=("graph", "iterative"),
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sales_data_pipeline_gcp_spark.functions.exact import dec
-
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
@@ -378,7 +390,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nn_row))
         .select("node", "deg", "n", (F.lit(1.0) / F.col("n")).alias("rank"))
     )
-    for _ in range(PR_ITERATIONS):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         srcw = ranks.select(
             F.col("node").alias("src"), (F.col("rank") / F.col("deg")).alias("w")
         )
@@ -396,22 +409,19 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.coalesce(F.sum(dec(F.col("w"), 12)), F.lit(0).cast("decimal(38,12)")).cast("double").alias("s"))
         )
-        # per-iteration checkpoint (|nodes| rows): iteration k's plan must
-        # not replay iterations 1..k-1 — same discipline as
-        # connected_components' rounds. deg/n ride along so the next
-        # iteration's weight projection needs no join.
-        ranks = materialize(
-            ranks.join(F.broadcast(contrib), "node", "left")
-            .select(
-                "node",
-                "deg",
-                "n",
-                (
-                    F.lit(0.15) / F.col("n")
-                    + F.lit(PR_DAMPING) * F.coalesce(F.col("s"), F.lit(0).cast("double"))
-                ).alias("rank"),
-            )
+        # deg/n ride along so the next iteration's weight projection needs
+        # no join
+        return ranks.join(F.broadcast(contrib), "node", "left").select(
+            "node",
+            "deg",
+            "n",
+            (
+                F.lit(0.15) / F.col("n")
+                + F.lit(PR_DAMPING) * F.coalesce(F.col("s"), F.lit(0).cast("double"))
+            ).alias("rank"),
         )
+
+    ranks, _ = fixpoint(ranks, step, label="pagerank_iter", max_rounds=PR_ITERATIONS)
     return (
         ranks.select(
             "node",
@@ -425,6 +435,31 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- triangle enumeration over the near-dup graph -------------------------
 
+#: The oracle side of ``_triangles`` over an ``edges(a, b)`` CTE.
+_TRIANGLES_SQL = """SELECT e1.a AS doc_a, e1.b AS doc_b, e2.b AS doc_c
+    FROM edges e1
+    JOIN edges e2 ON e2.a = e1.b
+    JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b
+    """
+
+
+def _triangles(edges: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, doc_c) for every triangle of an ``(a, b)`` edge list
+    oriented a < b: one self-join builds the wedges, a second closes them,
+    so each triangle appears once as a < b < c."""
+    e1 = edges.alias("e1")
+    e2 = edges.alias("e2")
+    e3 = edges.alias("e3")
+    return (
+        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
+        .join(e3, (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")))
+        .select(
+            F.col("e1.a").alias("doc_a"),
+            F.col("e1.b").alias("doc_b"),
+            F.col("e2.b").alias("doc_c"),
+        )
+    )
+
 
 @register(
     "q_graph_triangles",
@@ -435,11 +470,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_a AS a, doc_b AS b FROM jaccard_pairs
         WHERE jaccard >= {JACCARD_THRESHOLD}
     )
-    SELECT e1.a AS doc_a, e1.b AS doc_b, e2.b AS doc_c
-    FROM edges e1
-    JOIN edges e2 ON e2.a = e1.b
-    JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b
-    """,
+    {_TRIANGLES_SQL}""",
     doc="Triangle enumeration over the near-dup similarity graph: triples "
     "of documents that are ALL pairwise near-duplicates — the template-"
     "family signal (a triangle is much stronger evidence of a shared "
@@ -470,18 +501,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )
-    e1 = edges.alias("e1")
-    e2 = edges.alias("e2")
-    e3 = edges.alias("e3")
-    return (
-        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
-        .join(e3, (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")))
-        .select(
-            F.col("e1.a").alias("doc_a"),
-            F.col("e1.b").alias("doc_b"),
-            F.col("e2.b").alias("doc_c"),
-        )
-    )
+    return _triangles(edges)
 
 
 @register(
@@ -496,11 +516,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN jaccard_pairs j ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
         WHERE j.jaccard >= {JACCARD_THRESHOLD}
     )
-    SELECT e1.a AS doc_a, e1.b AS doc_b, e2.b AS doc_c
-    FROM edges e1
-    JOIN edges e2 ON e2.a = e1.b
-    JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b
-    """,
+    {_TRIANGLES_SQL}""",
     doc="The PRODUCTION twin of q_graph_triangles: same triangle kernel, "
     "but edges come from the MinHash+LSH candidate generator + exact-"
     "Jaccard verification (the q_dedup_minhash pipeline) instead of the "
@@ -523,18 +539,7 @@ def q_graph_triangles_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = materialize(
         neardup_pairs(docs).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     )
-    e1 = edges.alias("e1")
-    e2 = edges.alias("e2")
-    e3 = edges.alias("e3")
-    return (
-        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
-        .join(e3, (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")))
-        .select(
-            F.col("e1.a").alias("doc_a"),
-            F.col("e1.b").alias("doc_b"),
-            F.col("e2.b").alias("doc_c"),
-        )
-    )
+    return _triangles(edges)
 
 
 #: Sparsify the trade graph to each customer's top-K suppliers by trade
@@ -545,11 +550,8 @@ def q_graph_triangles_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: standard bound (the same degree-capping lever as stop-shingles).
 KHOP_TOP_SUPPLIERS = 5
 
-
-@register(
-    "q_graph_khop",
-    oracle=f"""
-    WITH trade AS (
+#: The oracle side of ``_topk_trade_edges``: CTEs ending in ``edges(c, s)``.
+_TOPK_EDGES_SQL = f"""trade AS (
         SELECT o.o_custkey AS c, l.l_suppkey AS s,
                SUM(CAST(l.l_extendedprice AS DECIMAL(38,2))) AS v
         FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -560,7 +562,36 @@ KHOP_TOP_SUPPLIERS = 5
         FROM trade
     ), edges AS (
         SELECT c, s FROM ranked WHERE rn <= {KHOP_TOP_SUPPLIERS}
+    )"""
+
+
+def _topk_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(c, s): each customer's top-``KHOP_TOP_SUPPLIERS`` suppliers by
+    decimal-exact trade value, ties broken by suppkey — the sparsified
+    trade graph of q_graph_khop and q_graph_sssp. The tables are read
+    without ``fan_out``: the rollup's map work (one decimal conversion and
+    a broadcast probe) is too cheap to pay for a keyless full-row
+    repartition (interleaved A/B of q_graph_khop: 2.8 s without, 3.1-4.2 s
+    with)."""
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_extendedprice")
+    trade = (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .groupBy(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+        .agg(F.sum(dec("l_extendedprice", 2)).alias("v"))
     )
+    w = W.partitionBy("c").orderBy(F.col("v").desc(), F.col("s").asc())
+    return (
+        trade.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= KHOP_TOP_SUPPLIERS)
+        .select("c", "s")
+    )
+
+
+@register(
+    "q_graph_khop",
+    oracle=f"""
+    WITH {_TOPK_EDGES_SQL}
     SELECT p1.c AS custkey,
            COUNT(DISTINCT p1.s) AS n_suppliers,
            COUNT(DISTINCT CASE WHEN p2.c <> p1.c THEN p2.c END)
@@ -602,30 +633,9 @@ KHOP_TOP_SUPPLIERS = 5
     tags=("graph", "join", "window"),
 )
 def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    from sales_data_pipeline_gcp_spark.functions.exact import dec
     from sales_data_pipeline_gcp_spark.operators.relational2 import BITMAP_WORD
 
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # NOTE (round 13): probe-side fan_out was measured here and REVERTED —
-    # the trade rollup's map work (one decimal conversion + broadcast
-    # probe) is too cheap to amortize a full-row keyless repartition
-    # (interleaved A/B: 2.8 -> 3.1-4.2s), unlike the 5-product OLS shape.
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    trade = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .agg(F.sum(dec("l_extendedprice", 2)).alias("v"))
-    )
-    w = W.partitionBy("c").orderBy(F.col("v").desc(), F.col("s").asc())
-    edges = (
-        trade.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KHOP_TOP_SUPPLIERS)
-        .select("c", "s")
-    )
+    edges = _topk_trade_edges(spark, sf_dir)
     # degree = exact n_suppliers: edges carry one row per (c, s)
     degree = edges.groupBy(F.col("c").alias("custkey")).agg(
         F.count("*").alias("n_suppliers")
@@ -668,18 +678,7 @@ SSSP_MAX_HOPS = 3
 @register(
     "q_graph_sssp",
     oracle=f"""
-    WITH RECURSIVE trade AS (
-        SELECT o.o_custkey AS c, l.l_suppkey AS s,
-               SUM(CAST(l.l_extendedprice AS DECIMAL(38,2))) AS v
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        GROUP BY o.o_custkey, l.l_suppkey
-    ), ranked AS (
-        SELECT c, s,
-               ROW_NUMBER() OVER (PARTITION BY c ORDER BY v DESC, s) AS rn
-        FROM trade
-    ), edges AS (
-        SELECT c, s FROM ranked WHERE rn <= {KHOP_TOP_SUPPLIERS}
-    ), cc AS (
+    WITH RECURSIVE {_TOPK_EDGES_SQL}, cc AS (
         SELECT DISTINCT p1.c AS a, p2.c AS b
         FROM edges p1 JOIN edges p2 ON p1.s = p2.s AND p1.c <> p2.c
     ), walk(c, d) AS (
@@ -699,8 +698,10 @@ SSSP_MAX_HOPS = 3
     "degree-bounded). Spark side is the Pregel-style frontier loop: each "
     "round joins the previous frontier to the edge list, unions, and "
     "takes MIN(dist) per node, localCheckpoint-truncating lineage per "
-    "round — the iteration count is the hop cap, a CONSTANT, never "
-    "data-dependent driver control flow. Spark NEVER materializes the "
+    "round. The loop runs at most the hop cap and stops after a round "
+    "that reaches no new node (observed max(dist) < round, read from the "
+    "checkpoint job itself); every later round would be a no-op on an "
+    "empty frontier. Spark NEVER materializes the "
     "customer-customer projection the oracle's cc CTE builds: one "
     "projection hop is expanded as two bipartite hops (frontier -> its "
     "suppliers, distinct -> their customers), so per-round cost is two "
@@ -718,24 +719,7 @@ SSSP_MAX_HOPS = 3
     tags=("graph", "iterative", "join"),
 )
 def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    from sales_data_pipeline_gcp_spark.functions.exact import dec
-
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_extendedprice")
-    trade = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .agg(F.sum(dec("l_extendedprice", 2)).alias("v"))
-    )
-    w = W.partitionBy("c").orderBy(F.col("v").desc(), F.col("s").asc())
-    edges = (
-        trade.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KHOP_TOP_SUPPLIERS)
-        .select("c", "s")
-    )
-    edges = materialize(edges, label="sssp_edges")
+    edges = materialize(_topk_trade_edges(spark, sf_dir), label="sssp_edges")
     # seed frontier: the lowest-keyed customer at distance 0, kept entirely
     # on the executors as a one-row DataFrame (no driver-side collect —
     # the seed is data, not control flow, so it never has to leave the JVM)
@@ -743,15 +727,13 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.agg(F.min("c").alias("c")).select("c", F.lit(0).cast("int").alias("d")),
         label="sssp_seed",
     )
-    for r in range(1, SSSP_MAX_HOPS + 1):
+
+    def step(dist: DataFrame, r: int) -> DataFrame:
         # one projection hop = two bipartite hops; the distinct supplier
         # frontier is bounded by the supplier dimension, never pair counts.
-        # NOTE (round 13): explicit F.broadcast of the frontier sides was
-        # measured here and REVERTED (interleaved A/B min 3.15 -> 3.51s):
-        # the per-round driver-side broadcast builds cost more than the
-        # AQE-planned joins they replaced — AQE already keeps these joins
-        # cheap at bench scale, and at cluster scale the frontier-broadcast
-        # decision belongs to AQE's runtime statistics anyway.
+        # The joins stay AQE-planned: an explicit F.broadcast of the
+        # frontier sides was slower (interleaved A/B, min 3.15 s -> 3.51 s),
+        # its per-round driver-side builds costing more than the joins.
         sup = (
             dist.filter(F.col("d") == r - 1)
             .join(edges, "c")
@@ -759,8 +741,12 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         frontier = sup.join(edges, "s").select("c", F.lit(r).alias("d"))
-        dist = materialize(
-            dist.unionByName(frontier).groupBy("c").agg(F.min("d").alias("d")),
-            label="sssp_round",
-        )
+        return dist.unionByName(frontier).groupBy("c").agg(F.min("d").alias("d"))
+
+    # a round that reaches no new node leaves max(d) < r; the next round's
+    # frontier (d == r) is then empty, so every later round is a no-op
+    dist, _ = fixpoint(
+        dist, step, label="sssp_round", max_rounds=SSSP_MAX_HOPS,
+        metrics=(F.max("d").alias("d"),), done=lambda m, r, *_: m["d"] < r,
+    )
     return dist.select(F.col("c").alias("custkey"), F.col("d").cast("int").alias("dist"))

@@ -194,6 +194,26 @@ def test_sssp_is_valid_bfs(spark):
     assert rows == dist
 
 
+
+def test_sssp_stops_on_empty_frontier(spark, monkeypatch):
+    """A round that reaches no new customer ends the BFS: its successor's
+    frontier would be empty. At smoke scale round 2 reaches nobody new
+    (every distance is <= 1), so round 3 never runs."""
+    from sales_data_pipeline_gcp_spark.operators import components
+
+    real = components.materialize
+    labels = []
+
+    def spy(df, label=None):
+        labels.append(label)
+        return real(df, label=label)
+
+    monkeypatch.setattr(components, "materialize", spy)
+    rows = q_graph_sssp(spark, SF_SMOKE).collect()
+    assert max(r.dist for r in rows) == 1
+    assert labels.count("sssp_round") == 2
+
+
 def test_funnel_steps_bruteforce(spark):
     from sales_data_pipeline_gcp_spark.operators.events_queries import q_funnel_steps
 

@@ -117,6 +117,30 @@ def test_star_converges_on_long_chain_where_propagation_cannot(spark):
         connected_components(df, max_iterations=12)
 
 
+
+def test_fixpoints_run_no_convergence_count_jobs(spark, monkeypatch):
+    """Convergence is read from an Observation on each round's checkpoint
+    job: label propagation runs no ``count()`` at all, and star contraction
+    counts only the one-sided difference on an edge-count tie. The triangle
+    contracts to a 2-edge star in round 1 (3 -> 2 edges, no tie) and is
+    confirmed unchanged in round 2 (one tie, one count)."""
+    df = spark.createDataFrame([(0, 1), (1, 2), (0, 2)], "src long, dst long")
+    cls = type(df)
+    real_count = cls.count
+    calls = []
+
+    def counting(self):
+        calls.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(cls, "count", counting)
+    prop = {r.node: r.label for r in connected_components(df).collect()}
+    assert len(calls) == 0
+    star = {r.node: r.label for r in connected_components_star(df).collect()}
+    assert len(calls) == 1
+    assert prop == star == {0: 0, 1: 0, 2: 0}
+
+
 # --- stop-shingle drop: semantics + skew bound under adversarial corpora ---
 
 from pyspark.sql import functions as F
