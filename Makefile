@@ -5,7 +5,7 @@
 
 PY := python
 
-.PHONY: test parity-sf01 parity-sf1 parity-sf1-derived bench sweep
+.PHONY: test parity-sf01 parity-sf1 parity-sf1-derived bench perf sweep
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -26,5 +26,17 @@ parity-sf1-derived:
 # committed BENCH_FULL.json via `python bench.py --merge <raw records>`
 bench:
 	$(PY) bench.py
+
+# both BENCHMARK.json workloads, once untraced (end-to-end metrics) and
+# once traced (per-layer metrics), in the tier-1 test environment; the last
+# stdout line of each run is its result. `make perf SEED=9173` is the
+# held-out seed.
+SEED ?= 1
+PERF_ENV := SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
+
+perf:
+	for w in ingest_batch queries_iterative; do for t in 0 1; do \
+	  $(PERF_ENV) $(PY) perfbench/run.py --workload $$w --seed $(SEED) --seconds 8 --trace $$t || exit 1; \
+	done; done
 
 sweep: test parity-sf1 bench

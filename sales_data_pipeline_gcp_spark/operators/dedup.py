@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sales_data_pipeline_gcp_spark.functions.hashing import (
@@ -438,18 +438,20 @@ def drop_stop_shingles(
     skew hazard of shingle pipelines at 100 TB (same idea as stopword
     removal; AQE skew-join only mitigates moderate skew).
 
-    Threshold semantics (round-4 ADVICE fix): ``max_df`` is an ABSOLUTE
-    document count. Under Zipfian shingle distributions the ``df > k`` set
-    grows roughly linearly with corpus size, so an absolute count is a
-    small-corpus convenience, not the scale policy — pass ``max_df_frac``
-    instead to set the threshold to ``ceil(frac * |docs|)`` (|docs| comes
-    from a broadcast single-row count, computed relationally), which keeps
-    the hot set genuinely small by construction at any corpus size.
+    Threshold semantics: ``max_df`` is an ABSOLUTE document count. Under
+    Zipfian shingle distributions the ``df > k`` set grows roughly linearly
+    with corpus size, so an absolute count is a small-corpus convenience,
+    not the scale policy — pass ``max_df_frac`` instead to set the
+    threshold to ``ceil(frac * |docs|)`` (|docs| comes from a broadcast
+    single-row count, computed relationally), which keeps the hot set
+    genuinely small by construction at any corpus size.
 
-    The removal path adapts to the hot set's cardinality — decided by one
-    ``count()`` over the already-aggregated (and checkpointed) hot-shingle
-    relation, a runtime-statistics scheduling decision in the AQE mold,
-    not a data-path collect:
+    The removal path adapts to the hot set's cardinality — read from an
+    unnamed ``Observation`` on the hot-shingle relation's checkpoint job
+    (no job of its own; a separate ``count()`` was 2 of
+    ``q_dedup_minhash_stopshingle``'s 11 eager jobs at sf0.1), a
+    runtime-statistics scheduling decision in the AQE mold, not a
+    data-path collect:
 
     - ``<= broadcast_budget``: fold the hot set to ONE array broadcast to
       every task; removal is an in-row ``array_except`` — zero extra
@@ -476,8 +478,9 @@ def drop_stop_shingles(
             counts.join(F.broadcast(n_docs))
             .filter(F.col("df") > F.ceil(F.lit(max_df_frac) * F.col("__n")))
         )
-    hot_rel = materialize(hot_rel.select("shingle"))
-    if hot_rel.count() <= broadcast_budget:
+    obs = Observation()
+    hot_rel = materialize(hot_rel.select("shingle").observe(obs, F.count("*").alias("n")))
+    if obs.get["n"] <= broadcast_budget:
         hot = hot_rel.agg(F.collect_set("shingle").alias("__hot"))
         return (
             shs.join(F.broadcast(hot))

@@ -26,16 +26,22 @@ from __future__ import annotations
 import argparse
 
 from sales_data_pipeline_gcp_spark.cleaning import clean_sales
-from sales_data_pipeline_gcp_spark.io import read_sales_csv, write_append
+from sales_data_pipeline_gcp_spark.io import read_sales_csv, sink_rows, write_append
 from sales_data_pipeline_gcp_spark.session import get_spark
 
 
 def run(input_path: str, out: str, *, fmt: str = "parquet", audit: bool = True, partition_by: list[str] | None = None, spark=None) -> int:
-    """Read -> clean -> append. Returns the number of rows written."""
+    """Read -> clean -> append. Returns the rows in the sink after the
+    append (its running total, not the rows this call wrote).
+
+    A parquet run is one Spark job, the write: the total comes from the
+    sink's parquet footers (``io.sink_rows``). A missing input raises
+    ``[PATH_NOT_FOUND]`` before anything is written; a header-only CSV
+    appends no rows."""
     spark = spark or get_spark("process_sales")
     df = clean_sales(read_sales_csv(spark, input_path), audit=audit)
     write_append(df, out, fmt=fmt, partition_by=partition_by)
-    return spark.read.format(fmt).load(out).count()
+    return sink_rows(spark, out, fmt)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -208,6 +208,26 @@ def test_stop_shingle_drop_bounds_candidate_blowup(spark):
     assert sparse == 0
 
 
+def test_drop_stop_shingles_runs_no_count(spark, monkeypatch):
+    """The hot-set size that picks the removal path is observed on the
+    hot-shingle checkpoint job; no separate ``count()`` runs."""
+    shs = materialize(
+        shingle_arrays(spark.createDataFrame(_stop_corpus(), "doc_id long, text string"))
+    )
+    cls = type(shs)
+    real_count = cls.count
+    calls = []
+
+    def counting(self):
+        calls.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(cls, "count", counting)
+    drop_stop_shingles(shs, 5)
+    drop_stop_shingles(shs, 5, broadcast_budget=0)
+    assert calls == []
+
+
 def test_drop_stop_shingles_left_anti_path_equivalent(spark):
     """``broadcast_budget=0`` forces the exploded left_anti fallback (the
     path taken when the hot set outgrows a single task's broadcast
